@@ -15,52 +15,26 @@ import org.apache.spark.sql.SparkSession
   * outliers can be adjudicated from one artifact — see BASELINE.md
   * "Dual-run convention".
   *
-  * Drift bound (round-7 VERDICT "Next round #4"): one SparkSession
-  * accumulating 800+ materializations drifted ~+14% per query as the
-  * suite grew (heap/GC pressure — plans unchanged). The session is now
-  * RESTARTED every `restartEvery` measured queries (default 100,
-  * override SPARK_GRAFT_RESTART_EVERY; 0 disables), releasing block
-  * manager, broadcast, and listener-bus state; JVM-global caches
-  * (codegen) survive, and each fresh session re-warms on one sf0.001
-  * query before measuring resumes, so per-query numbers stay comparable
-  * across suite growth.
+  * Drift bound (round-7 VERDICT "Next round #4"): the measured queries
+  * run through [[Harness.Loop]], which restarts the session every 100 of
+  * them; each fresh session re-warms on one sf0.001 query before
+  * measuring resumes, so per-query numbers stay comparable across suite
+  * growth.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val restartEvery = sys.env.get("SPARK_GRAFT_RESTART_EVERY")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(100)
+    val warmDir = "/root/testdata/sf0.001"
 
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
+    def action(name: String, dir: String)(s: SparkSession): Unit =
+      SparkEntry.queries(name)(s, dir).write.format("noop").mode("overwrite").save()
+    // Watchdog (inside the loop): a stuck query records -1 and the run
+    // continues — round 6's BENCH artifact was zeroed by a single 1 h hang.
+    def seconds(name: String, o: Harness.Outcome): Double = o.error match {
+      case Some(msg) => System.err.println(s"[bench] $name failed: $msg"); -1.0
+      case None => o.seconds
     }
-    var spark = newSession()
-
-    def materialize(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      // Watchdog: a stuck query records -1 and the run continues —
-      // round 6's BENCH artifact was zeroed by a single 1 h hang.
-      val err = Watchdog.run(spark, name) {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      graft.ops.Caches.clear() // release shared persisted subtrees
-      err match {
-        case Some(msg) =>
-          System.err.println(s"[bench] $name failed: $msg"); -1.0
-        case None => (System.nanoTime() - t0) / 1e9
-      }
-    }
+    val loop = new Harness.Loop(rewarm = Some((s, name) => action(name, warmDir)(s)))
 
     // SPARK_GRAFT_ONLY (local dev only; the driver never sets it): CSV of
     // query names to measure — lets a single new query get its dual-run
@@ -71,7 +45,7 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
 
     // warmup at the smallest SF (not measured)
-    names.foreach(materialize(_, "/root/testdata/sf0.001"))
+    names.foreach(n => seconds(n, loop.once(n)(action(n, warmDir))))
 
     // TWO measured passes, back to back. Host timing variance on this
     // box is ±40% on heavy queries (BASELINE.md "A/B evidence"), so a
@@ -80,16 +54,8 @@ object Bench {
     // both columns, host noise does not. The headline `queries`/`value`
     // stay run A (unchanged methodology vs every prior round's
     // baseline); run B rides along as `queriesB` for adjudication.
-    var measured = 0
-    def measure(name: String): (String, Double) = {
-      if (restartEvery > 0 && measured > 0 && measured % restartEvery == 0) {
-        spark.stop()
-        spark = newSession()
-        materialize(name, "/root/testdata/sf0.001") // re-warm, not measured
-      }
-      measured += 1
-      name -> materialize(name, sfDir)
-    }
+    def measure(name: String): (String, Double) =
+      name -> seconds(name, loop(name)(action(name, sfDir)))
     val runA = names.map(measure)
     val runB = names.map(measure)
 
@@ -102,13 +68,12 @@ object Bench {
     val streamJson: String =
       if (only.isDefined || sys.env.get("SPARK_GRAFT_STREAMBENCH").contains("0")) ""
       else {
-        spark.stop()
-        spark = newSession()
+        loop.restart()
         val rows = sys.env.get("SPARK_GRAFT_STREAM_ROWS")
           .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(100000)
         var results = Map.empty[String, graft.streaming.StreamBench.OpResult]
-        Watchdog.run(spark, "streambench", timeoutSec = 600L) {
-          results = graft.streaming.StreamBench.run(spark, rows)
+        Watchdog.run(loop.spark, "streambench", timeoutSec = 600L) {
+          results = graft.streaming.StreamBench.run(loop.spark, rows)
         }.foreach(msg => System.err.println(s"[bench] streambench failed: $msg"))
         if (results.isEmpty) ""
         else results.toSeq.sortBy(_._1).map { case (k, r) =>
@@ -130,7 +95,7 @@ object Bench {
       if (only.isDefined || sys.env.get("SPARK_GRAFT_STREAMBENCH").contains("0")
           || sys.env.get("SPARK_GRAFT_STREAM_SCALING").contains("0")) ""
       else {
-        spark.stop()
+        loop.stop()
         val rows = sys.env.get("SPARK_GRAFT_STREAM_SCALE_ROWS")
           .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(25000)
         @volatile var results =
@@ -169,6 +134,6 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}") }
     println(json)
-    spark.stop()
+    loop.stop()
   }
 }

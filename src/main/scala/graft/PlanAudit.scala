@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: one-line physical-plan summary per declared query —
   * join strategies, exchange/sort counts, scan pruning — so a plan
   * regression (a theta join degrading to nested-loop, a new global sort,
@@ -13,13 +11,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val loop = new Harness.Loop()
 
     val interesting = Seq(
       "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
@@ -30,8 +22,8 @@ object PlanAudit {
       "ReusedExchange")
 
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
+      loop(name) { s =>
+        val df = fn(s, sfDir)
         // collect() on df's OWN QueryExecution so AQE finalizes the plan
         // we read — a side-channel noop write executes a separate
         // QueryExecution and would leave this one pre-AQE (isFinalPlan
@@ -47,10 +39,8 @@ object PlanAudit {
           if (n > 0) Some(s"$op=$n") else None
         }
         println(f"$name%-28s ${counts.mkString(" ")}")
-      } catch {
-        case e: Throwable => println(f"$name%-28s FAILED: ${e.getMessage}")
-      } finally graft.ops.Caches.clear() // release shared persisted subtrees
+      }.error.foreach(msg => println(f"$name%-28s FAILED: $msg"))
     }
-    spark.stop()
+    loop.stop()
   }
 }

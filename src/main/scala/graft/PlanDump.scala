@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Diagnostic main: write `.explain("formatted")` for a CSV of declared
@@ -16,25 +15,16 @@ object PlanDump {
     val outDir = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val suffix = if (args.length > 3) args(3) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val loop = new Harness.Loop()
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val plan = df.queryExecution
-        .explainString(ExplainMode.fromString("formatted"))
-      Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), plan)
-      println(s"[plandump] wrote $outDir/${n}_$suffix.txt")
-      graft.ops.Caches.clear()
+      loop(n) { s =>
+        val plan = SparkEntry.queries(n)(s, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
+        Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), plan)
+        println(s"[plandump] wrote $outDir/${n}_$suffix.txt")
+      }.error.foreach(msg => System.err.println(s"[plandump] $n failed: $msg"))
     }
-    graft.ops.Caches.clearPinned()
-    spark.stop()
+    loop.stop()
   }
 }

@@ -1,18 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local-only smoke main for the streaming micro-bench (not a driver
   * contract; kept tiny so StreamBench changes can be exercised without
   * a full Bench run). */
 object StreamBenchSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     if (args.headOption.contains("scaling")) {
-      spark.stop() // runScaling builds one fresh session per config
       val rows = args.lift(1).map(_.toInt).getOrElse(8000)
       graft.streaming.StreamBench.runScaling(rows).toSeq.sortBy(_._1)
         .foreach { case (cfg, ops) =>
@@ -22,6 +15,7 @@ object StreamBenchSmoke {
         }
       return
     }
+    val spark = Harness.session()
     val rows = args.headOption.map(_.toInt).getOrElse(20000)
     graft.streaming.StreamBench.run(spark, rows).toSeq.sortBy(_._1)
       .foreach { case (k, r) =>

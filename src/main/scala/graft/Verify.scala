@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,39 +8,19 @@ object Verify {
     // Optional third arg (local dev only): CSV of query names to run.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val loop = new Harness.Loop()
     new java.io.File(outDir).mkdirs()
-    // Pinned-tier lifecycle (round-11 VERDICT #5): Verify walks all 510
-    // queries in ONE session, so without a periodic release the
-    // suite-scoped pinned families (collapse chain, co-purchase edges,
-    // detector scores, lang-id, daily counts) accumulate block-manager
-    // residency for the whole run. Mirror Bench's 100-query session
-    // windows with a clearPinned() every `pinWindow` queries: peak pinned
-    // storage is bounded by one window's families, and the next window's
-    // first consumer rebuilds from parquet exactly as in Bench.
-    val pinWindow = 100
-    var done = 0
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // Watchdog: one stuck query must cost one red row, not the round
-      // (round 6's artifacts were zeroed by a single 1 h hang).
-      Watchdog.run(spark, name) {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }.foreach(msg => System.err.println(s"[verify] $name failed: $msg"))
-      graft.ops.Caches.clear() // release shared persisted subtrees
-      done += 1
-      if (done % pinWindow == 0) graft.ops.Caches.clearPinned()
+      // Watchdog (inside the loop): one stuck query must cost one red
+      // row, not the round (round 6's artifacts were zeroed by a single
+      // 1 h hang).
+      loop(name) { s =>
+        fn(s, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }.error.foreach(msg => System.err.println(s"[verify] $name failed: $msg"))
     }
+    val spark = loop.spark
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -167,6 +146,6 @@ object Verify {
             .mkString(", ") + "]}"
       }.mkString("[", ", ", "]")
     Files.writeString(Paths.get(s"$outDir/oracle_prelude.json"), preludeJson)
-    spark.stop()
+    loop.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Per-query watchdog for the harness mains (Verify, Bench).
+/** Per-query watchdog, run by the harness loop (`Harness.Loop`).
   *
   * Round-6 lesson: ONE pathological query (q341's first cut — an
   * expression-level fold that Catalyst inlined into O(grid^8)

@@ -76,7 +76,7 @@ object Behavior {
     // queries (q125/q134/q143/q146/q150/q161/q164 et al.) re-derive this
     // identical (type × day) grid, each paying a full events scan + agg.
     // The grid is value-bounded (#types × #days) — the pinnable shape.
-    Caches.memoPinned(s"dailyCounts|${Caches.sessionId(s)}|$d") {
+    Caches.family(s, d, "dailyCounts") {
       Caches.pinned(Tables.events(s, d)
         .select(col("event_type"), dayIndex.as("day"))
         .groupBy("event_type", "day").agg(count(lit(1)).as("c")))

@@ -1,53 +1,43 @@
 package graft.ops
 
-import org.apache.spark.sql.Dataset
+import scala.jdk.CollectionConverters._
 
-/** Session-lifetime cache registry for shared query subtrees.
+import org.apache.spark.sql.{Dataset, SparkSession}
+
+/** Cache registry for shared query subtrees, in two lifetimes.
   *
   * The repo's subtree-reuse rule (README "100 TB design notes") is: a
   * non-iterative frame consumed by 2+ plan branches gets an EAGER
   * `persist()` — a lazy persist lets branches scheduled in the same job
   * wave race past the empty cache and each recompute the subtree
-  * (measured ~2× on q118). The gap that left (round-4 ADVICE) was
-  * cleanup: builders persist but cannot unpersist, because the frame
-  * must stay cached until the CALLER materializes the query result, so
-  * each invocation leaked cached blocks for the session lifetime and
-  * relied on LRU eviction in long multi-query runs (Verify/Bench walk
-  * 130+ queries in one session).
+  * (measured ~2× on q118). A builder cannot unpersist such a frame
+  * itself, because it must stay cached until the CALLER materializes the
+  * query result.
   *
-  * `shared` centralizes the pattern: persist + eager fill + register.
-  * The harnesses (Verify, Bench) call [[clear]] after each query's
-  * result is fully written, releasing the blocks deterministically.
-  * Single-query callers that never clear() are no worse off than the
-  * old inline persist.
+  *  - Query scope: [[shared]] persists, fills and registers a frame;
+  *    [[clear]] releases every registered frame once the query result is
+  *    written.
+  *  - Window scope: a [[family]] is a derived value a group of queries
+  *    re-derives identically (the twin-collapse chain, the dup-cluster
+  *    labels, the daily counts, ...). It is built once per (session, data
+  *    dir, name), usually from [[pinned]] frames, survives [[clear]], and
+  *    is released by [[clearPinned]].
+  *
+  * Lifetimes are owned by `graft.Harness.Loop`: it calls [[clear]] after
+  * every query and [[clearPinned]] before it stops a session, so no
+  * family outlives the session it was built on. Single-query callers
+  * that never clear are no worse off than an inline persist.
   */
 object Caches {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
   private val pinnedTracked = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private val sessionIds =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, String]()
-
-  /** Unique id per LIVE session for [[memoPinned]] keys (round-10 ADVICE:
-    * System.identityHashCode can collide across two live sessions and
-    * silently share pinned frames bound to the wrong session). Weak keys:
-    * a stopped, collected session drops its entry; identity equality is
-    * what WeakHashMap uses here because SparkSession keeps reference
-    * semantics (no equals override).
-    */
-  def sessionId(s: org.apache.spark.sql.SparkSession): String =
-    sessionIds.synchronized {
-      var id = sessionIds.get(s)
-      if (id == null) {
-        id = java.util.UUID.randomUUID().toString
-        sessionIds.put(s, id)
-      }
-      id
-    }
+  // keyed by the session object itself: SparkSession keeps reference
+  // equality, so two live sessions never share an entry
+  private val families = new java.util.HashMap[(SparkSession, String, String), AnyRef]()
 
   /** Persist `ds` (MEMORY_AND_DISK), eagerly fill the cache with one
     * count() so same-wave branches all hit it, and register it for
-    * harness-side [[clear]].
+    * [[clear]].
     */
   def shared[T](ds: Dataset[T]): Dataset[T] = {
     val cached = ds.persist()
@@ -56,15 +46,10 @@ object Caches {
     cached
   }
 
-  /** Like [[shared]] but SUITE-RUN-scoped: survives per-query [[clear]]
-    * and is released only by [[clearPinned]] (or session end). For the
-    * small derived frames a FAMILY of queries provably re-derives
-    * identically (the twin-collapse chain's members/classes/verified
-    * pairs, the dup-cluster labels) — the round-9 bench showed the
-    * collapse constant paid 8× per suite run because clear() runs
-    * between queries. Pin ONLY frames that are linear in distinct
-    * content (never a shingle table): everything pinned stays resident
-    * for the rest of the run.
+  /** Like [[shared]] but window-scoped: survives [[clear]] and is
+    * released only by [[clearPinned]]. For the frames a [[family]] build
+    * returns. Pin ONLY frames that are linear in distinct content (never
+    * a shingle table): everything pinned stays resident for the window.
     */
   def pinned[T](ds: Dataset[T]): Dataset[T] = {
     val cached = ds.persist()
@@ -73,38 +58,41 @@ object Caches {
     cached
   }
 
-  /** Memoize an expensive build under `key` for the suite run — the
-    * build typically returns [[pinned]] frames. Keys must include the
-    * session identity and the data dir so a test suite with its own
-    * session or SF never reads another's frames. NOT computeIfAbsent:
-    * the memoized builds NEST (labels → edges → collapse chain) and
-    * CHM's computeIfAbsent throws "Recursive update" on reentry;
-    * a reentrant monitor + get/put allows the nesting.
+  /** The family `name` over data dir `d` in session `s`: built by `build`
+    * on first use and returned as-is until [[clearPinned]]. Builds may
+    * NEST (labels → edges → collapse chain), so this is a reentrant
+    * monitor around get/put, not `computeIfAbsent` (which throws
+    * "Recursive update" on reentry).
     */
-  def memoPinned[K <: AnyRef](key: String)(build: => K): K = memo.synchronized {
-    memo.get(key) match {
-      case null =>
-        val v = build
-        memo.put(key, v.asInstanceOf[AnyRef])
-        v
-      case v => v.asInstanceOf[K]
+  def family[K <: AnyRef](s: SparkSession, d: String, name: String)(build: => K): K =
+    families.synchronized {
+      val key = (s, d, name)
+      families.get(key) match {
+        case null =>
+          val v = build
+          families.put(key, v)
+          v
+        case v => v.asInstanceOf[K]
+      }
     }
-  }
 
-  /** Unpersist every tracked frame (non-blocking). Safe to call once the
-    * query result that consumed them has been materialized.
+  /** Unpersist every [[shared]] frame (non-blocking). Safe to call once
+    * the query result that consumed them has been materialized.
     */
   def clear(): Unit = {
     var d = tracked.poll()
     while (d != null) { d.unpersist(blocking = false); d = tracked.poll() }
   }
 
-  /** Release the suite-run-scoped tier too (harness shutdown, or a test
-    * suite that changes the underlying data between runs).
-    */
-  def clearPinned(): Unit = {
-    memo.clear()
+  /** Release the window scope: every family and every [[pinned]] frame. */
+  def clearPinned(): Unit = families.synchronized {
+    families.clear()
     var d = pinnedTracked.poll()
     while (d != null) { d.unpersist(blocking = false); d = pinnedTracked.poll() }
+  }
+
+  /** The sessions that family entries and pinned frames are bound to. */
+  private[graft] def residentSessions: Seq[SparkSession] = families.synchronized {
+    families.keySet.asScala.toSeq.map(_._1) ++ pinnedTracked.asScala.map(_.sparkSession)
   }
 }

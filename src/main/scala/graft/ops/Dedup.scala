@@ -285,7 +285,23 @@ object Dedup {
     * Returns (members(doc_id, fp, n), classes(fp, rep, m, n),
     * verified(doc_a, doc_b, na, nb, common, jac) over rep ids). */
   private[graft] def collapsedVerifiedPairs(
-      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
+      s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    val (members, classes, verified, _) = collapseChain(s, d)
+    (members, classes, verified)
+  }
+
+  /** The pinned REP wide MinHash signature (doc_id = rep, h0..h15) of
+    * the collapse chain — one row per twin class. Twins have IDENTICAL
+    * signatures, so any per-pair signature statistic (q156's slot
+    * matches, q424's band collisions) over the original corpus equals
+    * the rep pair's statistic expanded by class multiplicities. */
+  private[graft] def repSignatureWide(s: SparkSession, d: String): DataFrame =
+    collapseChain(s, d)._4
+
+  /** [[collapsedVerifiedPairs]] plus [[repSignatureWide]], built as ONE
+    * family so neither can be read before the other exists. */
+  private def collapseChain(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
     // MEMOIZED per (session, dir) and PINNED (round-10 amortization):
     // ten suite queries (q115/q118-front/q504/q505 + the component
     // consumers via dupEdgesSparse) re-derive this identical triple, and
@@ -295,8 +311,7 @@ object Dedup {
     // verified REP pairs), so pinning them for the run is cheap; the
     // corpus-sized shingle table stays query-scoped [[Caches.shared]]
     // and is released when the first consumer's query finishes.
-    Caches.memoPinned(
-        s"collapsedVerifiedPairs|${Caches.sessionId(s)}|$d") {
+    Caches.family(s, d, "collapseChain") {
       // ZERO-SHUFFLE members pass (round 10, second rework): the
       // per-doc distinct shingle set is an IN-ROW array
       // (array_sort(array_distinct(...))), so the fingerprint and set
@@ -329,17 +344,14 @@ object Dedup {
         .join(classes.select(col("rep").as("doc_id")),
           Seq("doc_id"), "left_semi")
         .select(col("doc_id"), explode(col("shs")).as("sh"))
-      // Publish the REP wide MinHash signature (round 11): the banding
+      // Pin the REP wide MinHash signature (round 11): the banding
       // below folds it into (band, bucket) anyway, so pinning the wide
       // form first (one row per class × 17 columns — linear in distinct
       // content, the pinnable shape) costs nothing extra here and lets
       // q156's calibration and q424's band-plan sweep read the SAME
       // signatures via [[repSignatureWide]] instead of re-deriving a
       // full-corpus shingle + signature chain each.
-      val sigWide = Caches.memoPinned(
-          s"repSigWide|${Caches.sessionId(s)}|$d") {
-        Caches.pinned(minhashSignatureWide(repSh, numHashes = 16))
-      }
+      val sigWide = Caches.pinned(minhashSignatureWide(repSh, numHashes = 16))
       val bands = explodeBandBuckets(sigWide, Seq("doc_id"),
         numHashes = 16, bandSize = 4)
       val cand = bands.as("x").hint("shuffle_hash")
@@ -349,21 +361,8 @@ object Dedup {
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
         .distinct()
-      (members, classes, Caches.pinned(jaccardOfPairs(cand, repSh)))
+      (members, classes, Caches.pinned(jaccardOfPairs(cand, repSh)), sigWide)
     }
-
-  /** The pinned REP wide MinHash signature (doc_id = rep, h0..h15)
-    * published by [[collapsedVerifiedPairs]] — one row per twin class.
-    * Twins have IDENTICAL signatures, so any per-pair signature statistic
-    * (q156's slot matches, q424's band collisions) over the original
-    * corpus equals the rep pair's statistic expanded by class
-    * multiplicities. */
-  private[graft] def repSignatureWide(s: SparkSession, d: String): DataFrame = {
-    collapsedVerifiedPairs(s, d) // builds the chain, publishing the memo
-    Caches.memoPinned[DataFrame](s"repSigWide|${Caches.sessionId(s)}|$d") {
-      sys.error("repSigWide is published by collapsedVerifiedPairs")
-    }
-  }
 
   /** Connectivity-EQUIVALENT sparse form of [[dupEdges]] for component
     * consumers (q65/q76/q106/q136/q160/q445/q457/q491): per twin class a
@@ -377,7 +376,7 @@ object Dedup {
     * content, never quadratic in copies. Canonical (doc_a < doc_b)
     * holds: rep = min member, and verified pairs are rep-ordered. */
   def dupEdgesSparse(s: SparkSession, d: String): DataFrame =
-    Caches.memoPinned(s"dupEdgesSparse|${Caches.sessionId(s)}|$d") {
+    Caches.family(s, d, "dupEdgesSparse") {
       val (members, classes, verified) = collapsedVerifiedPairs(s, d)
       val stars = members.join(classes.select(col("fp"), col("rep")), "fp")
         .filter(col("doc_id") =!= col("rep"))
@@ -395,7 +394,7 @@ object Dedup {
     * this: its point is the alternating-star algorithm, so it pays its
     * own rounds over the (memoized) sparse edges. */
   private[graft] def dupClusterLabels(s: SparkSession, d: String): DataFrame =
-    Caches.memoPinned(s"dupClusterLabels|${Caches.sessionId(s)}|$d") {
+    Caches.family(s, d, "dupClusterLabels") {
       Caches.pinned(connectedComponents(dupEdgesSparse(s, d)))
     }
 

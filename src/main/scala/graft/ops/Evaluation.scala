@@ -45,7 +45,7 @@ object Evaluation {
     // per-doc frame, each paying the two full character-trigram explodes;
     // the frame is two long columns per document — linear in docs, the
     // pinnable shape — so the build runs once per suite session.
-    Caches.memoPinned(s"detectorScores|${Caches.sessionId(s)}|$d") {
+    Caches.family(s, d, "detectorScores") {
       Caches.pinned(detectorScoresUncached(s, d))
     }
 

@@ -54,7 +54,7 @@ object Graph {
     // + C(32,2) in-row pair explode + pair groupBy paid ~11× per suite
     // run. The edge list is support≥2-pruned and bounded (≤ C(32,2) per
     // order), so pinning it for the run is cheap.
-    Caches.memoPinned(s"copurchaseEdges|${Caches.sessionId(s)}|$d") {
+    Caches.family(s, d, "copurchaseEdges") {
       Caches.pinned(copurchaseEdgesUncached(s, d))
     }
 
@@ -326,7 +326,7 @@ object Graph {
       // DOES run Spark jobs at DataFrame-construction time — builders
       // of this query pay supersteps 1–2 up front (bounded, node-sized
       // work) and must release the registered caches via Caches.clear
-      // (Verify/Bench/PlanAudit and PlanSpec's fleet tests all do).
+      // (graft.Harness.Loop and PlanSpec's fleet tests both do).
       // Mechanism conf-gated via spark.graft.checkpointDir (reliable
       // on clusters, local here).
       // ONE explicit hash exchange on the join key, shared by all three

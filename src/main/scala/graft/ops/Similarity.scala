@@ -79,9 +79,8 @@ object Similarity {
     // family re-derives this identical |vecs|×|cents| assignment, and
     // per-query Caches.clear() made each consumer rebuild it. `assigned`
     // is linear in vectors, `cents` LIMIT-bounded; residency is bounded
-    // by the harness windows (Bench session restarts, Verify's
-    // clearPinned every 100 queries — the round-11 VERDICT #5 fix).
-    Caches.memoPinned(s"assignedCells|${Caches.sessionId(s)}|$d") {
+    // by the harness loop's 100-query window (graft.Harness.Loop).
+    Caches.family(s, d, "assignedCells") {
       val e = vecs(s, d)
       val cents = Caches.pinned(e.filter(col("vec_id") % 50 === 0)
         .orderBy("vec_id").limit(MaxCentroids)
@@ -156,7 +155,7 @@ object Similarity {
     // passes + three (cell × dim) collects). The vector frame is linear
     // in vectors, centroids/stats are k·d-bounded literals; harness
     // windows bound residency (see assignedCells).
-    Caches.memoPinned(s"lloyd3|${Caches.sessionId(s)}|$d") {
+    Caches.family(s, d, "lloyd3") {
       lloyd3Build(s, d)
     }
 

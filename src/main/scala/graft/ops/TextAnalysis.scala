@@ -129,7 +129,7 @@ object TextAnalysis {
     // this identical predictor frame, each paying the full trigram
     // explode + per-lang profile windows. The output is one row per
     // %23-sampled doc — linear in docs, pinnable.
-    Caches.memoPinned(s"langIdPredictions|${Caches.sessionId(s)}|$d") {
+    Caches.family(s, d, "langIdPredictions") {
       Caches.pinned(langIdPredictionsUncached(s, d))
     }
 

@@ -195,16 +195,10 @@ object StreamBench {
       ("p1", 1, false), ("p4", 4, false), ("p16", 16, false),
       ("p16_rocksdb", 16, true))
     configs.map { case (name, parts, rocks) =>
-      val b = SparkSession.builder()
-        .master("local[16]")
-        .config("spark.sql.shuffle.partitions", parts)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      if (rocks) b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      val s = b.getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = graft.Harness.session(parts,
+        if (rocks) Map("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        else Map.empty)
       val res =
         try run(s, rows, chunks)
         finally s.stop()

@@ -4,14 +4,22 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private var live: SparkSession = _
+
+  /** The session the suites share; rebuilt if a suite stopped it (the
+    * harness loop's spec restarts sessions). Suites run one after another
+    * in the forked test JVM, so a suite never sees it stopped mid-run. */
+  def spark: SparkSession = synchronized {
+    if (live == null || live.sparkContext.isStopped) live = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    live
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {
