@@ -76,68 +76,81 @@ abstract class ConvertBase extends UnaryExpression with CodegenFallback {
   private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
     .withZone(ZoneOffset.UTC)
 
+  /** The one schema walker: checks `value` against `dt` and, when `sb` is
+    * not null, appends its JSON image. [[ConvertError]] walks with a null
+    * `sb` — the same checks and messages, without formatting timestamps,
+    * escaping strings or building the document. `path` is by-name, so a
+    * field's path is rendered only for an error message. */
   protected def convert(value: Any, dt: DataType, nullable: Boolean,
-                        path: String, sb: java.lang.StringBuilder): Unit = {
+                        path: => String, sb: java.lang.StringBuilder): Unit = {
+    val emit = sb != null
     if (value == null) {
       // Reference: null in non-optional field → UnsupportedDataTypeException
       // (RecordConverter.java:25-31); optional null → JSON null.
       if (!nullable) throw ConversionException(s"null in required field $path")
-      sb.append("null"); return
+      if (emit) sb.append("null")
+      return
     }
     dt match {
       case s: StructType =>
         val row = value.asInstanceOf[InternalRow]
-        sb.append('{')
+        if (emit) sb.append('{')
         var i = 0
         while (i < s.length) {
-          if (i > 0) sb.append(',')
           val f = s.fields(i)
-          appendString(f.name, sb); sb.append(':')
+          if (emit) {
+            if (i > 0) sb.append(',')
+            appendString(f.name, sb); sb.append(':')
+          }
           val v = if (row.isNullAt(i)) null else row.get(i, f.dataType)
           convert(v, f.dataType, f.nullable, s"$path.${f.name}", sb)
           i += 1
         }
-        sb.append('}')
+        if (emit) sb.append('}')
       case a: ArrayType =>
         val arr = value.asInstanceOf[ArrayData]
-        sb.append('[')
+        if (emit) sb.append('[')
         var i = 0
         while (i < arr.numElements()) {
-          if (i > 0) sb.append(',')
+          if (emit && i > 0) sb.append(',')
           val v = if (arr.isNullAt(i)) null else arr.get(i, a.elementType)
-          convert(v, a.elementType, a.containsNull, s"$path[$i]", sb)
+          val at = i
+          convert(v, a.elementType, a.containsNull, s"$path[$at]", sb)
           i += 1
         }
-        sb.append(']')
+        if (emit) sb.append(']')
       case m: MapType =>
         val map = value.asInstanceOf[MapData]
         val keys = map.keyArray(); val vals = map.valueArray()
-        sb.append('{')
+        if (emit) sb.append('{')
         var i = 0
         while (i < map.numElements()) {
-          if (i > 0) sb.append(',')
+          if (emit && i > 0) sb.append(',')
           if (keys.isNullAt(i)) throw ConversionException(s"null map key at $path")
-          appendString(keys.getUTF8String(i).toString, sb); sb.append(':')
+          if (emit) { appendString(keys.getUTF8String(i).toString, sb); sb.append(':') }
           val v = if (vals.isNullAt(i)) null else vals.get(i, m.valueType)
-          convert(v, m.valueType, m.valueContainsNull, s"$path{$i}", sb)
+          val at = i
+          convert(v, m.valueType, m.valueContainsNull, s"$path{$at}", sb)
           i += 1
         }
-        sb.append('}')
-      case StringType => appendString(value.asInstanceOf[UTF8String].toString, sb)
+        if (emit) sb.append('}')
+      case StringType => if (emit) appendString(value.asInstanceOf[UTF8String].toString, sb)
       case BooleanType | ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType => sb.append(value.toString)
+           FloatType | DoubleType => if (emit) sb.append(value.toString)
       case d: DecimalType =>
-        sb.append(value.asInstanceOf[org.apache.spark.sql.types.Decimal]
+        if (emit) sb.append(value.asInstanceOf[org.apache.spark.sql.types.Decimal]
           .toJavaBigDecimal.toPlainString)
       case DateType =>
-        appendString(LocalDate.ofEpochDay(value.asInstanceOf[Int].toLong).format(dateFmt), sb)
+        if (emit) appendString(LocalDate.ofEpochDay(value.asInstanceOf[Int].toLong).format(dateFmt), sb)
       case TimestampType =>
-        val micros = value.asInstanceOf[Long]
-        appendString(tsFmt.format(Instant.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)), sb)
+        if (emit) {
+          val micros = value.asInstanceOf[Long]
+          appendString(tsFmt.format(Instant.ofEpochSecond(
+            Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L)), sb)
+        }
       case BinaryType =>
         if (strict) throw ConversionException(s"Bytes field is unsupported at $path")
-        appendString(java.util.Base64.getEncoder.encodeToString(
+        if (emit) appendString(java.util.Base64.getEncoder.encodeToString(
           value.asInstanceOf[Array[Byte]]), sb)
       case other => throw ConversionException(s"Unknown data type at $path: ${other.simpleString}")
     }
@@ -190,7 +203,7 @@ case class ConvertError(child: Expression, strict: Boolean = true,
                         target: Option[StructType] = None) extends ConvertBase {
   override def nullable: Boolean = true
   override def nullSafeEval(value: Any): Any =
-    try { convertTop(value); null }
+    try { convert(value, effectiveType, nullable = true, "$", null); null }
     catch { case ConversionException(msg) => UTF8String.fromString(msg) }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "convert_error"

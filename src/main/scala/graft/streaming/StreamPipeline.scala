@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.functions.StrictConvert
-import graft.sink.{AppendRowsException, ErrorClassifier, QuarantineLedger, SinkConfig, TwoPhaseParquetSink}
+import graft.sink.{AppendRowsException, ErrorClassifier, QuarantineLedger, SinkConfig, TwoPhaseParquetSink, WriteMode}
 
 /** End-to-end streaming assembly, the Spark image of the whole reference
   * dataflow (SURVEY.md §3.1):
@@ -21,6 +21,19 @@ import graft.sink.{AppendRowsException, ErrorClassifier, QuarantineLedger, SinkC
   * Structured Streaming's checkpoint: offsets advance only after the batch
   * lands, replays carry the same batchId, and the sink's commit ledger
   * makes replays no-ops.
+  *
+  * Per micro-batch the envelope is decoded and validated ONCE, like the
+  * reference converting each record once (see [[startWith]]):
+  *
+  *   1. materialize: one persisted frame (coordinates, `value`, decoded
+  *      `payload`, one `err` column) filled by a single observed `noop`
+  *      write that also returns the drift count;
+  *   2. `appendCheck` on the frame's good rows;
+  *   3. the data leg and the DLQ leg, written concurrently from the frame
+  *      (the image of the reference's in-flight appends joined by one
+  *      Phaser, BigqueryStreamWriter.java:58,97-100); the DLQ leg is
+  *      published only after the data leg has landed;
+  *   4. unpersist, on every path.
   */
 object StreamPipeline {
 
@@ -129,13 +142,35 @@ object StreamPipeline {
     * against the destination schema; the error column carries the reason
     * (errant-record report image). */
   def validationSplit(decoded: DataFrame, target: StructType): (DataFrame, DataFrame) = {
-    val payloadStruct = struct(target.fields.map(f => col(s"payload.${f.name}")).toIndexedSeq: _*)
-    val withErr = decoded.withColumn("err",
-      when(col("payload").isNull || col(s"payload.$CorruptField").isNotNull,
-           lit("unparseable payload"))
-        .otherwise(StrictConvert.convert_error_as(payloadStruct, target)))
+    val withErr = decoded.withColumn("err", validationError(target))
     (withErr.filter(col("err").isNull).drop("err"),
      withErr.filter(col("err").isNotNull))
+  }
+
+  /** The validation error of a decoded row, null when it is good — the one
+    * definition shared by [[validationSplit]] and the pipeline's batch. */
+  private def validationError(target: StructType): Column = {
+    val payloadStruct = struct(target.fields.map(f => col(s"payload.${f.name}")).toIndexedSeq: _*)
+    when(col("payload").isNull || col(s"payload.$CorruptField").isNotNull,
+         lit("unparseable payload"))
+      .otherwise(StrictConvert.convert_error_as(payloadStruct, target))
+  }
+
+  /** True for a row whose payload carries a top-level field the learned
+    * schema does not know (the [[SchemaDriftMonitor]] signal).
+    * Case-insensitive like [[startInferred]]'s schema reconciliation;
+    * malformed payloads yield NULL keys and are not drift (they already
+    * route to the DLQ as unparseable). */
+  private def unknownField(schema: StructType): Column = {
+    // Locale.ROOT: this lowercasing is compared against Spark's
+    // locale-independent lower() — default toLowerCase under tr/az
+    // JVMs maps I→ı and would flag every row as drifted
+    val known = (schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet +
+        CorruptField.toLowerCase(java.util.Locale.ROOT))
+      .toSeq.sorted.map(lit(_))
+    col("value").isNotNull && size(array_except(
+      transform(json_object_keys(col("value")), k => lower(k)),
+      array(known: _*))) > 0
   }
 
   /** Assemble and start the full pipeline on any streaming envelope
@@ -171,7 +206,7 @@ object StreamPipeline {
             appendCheck: DataFrame => Seq[(String, Int, Long, String)] = _ => Seq.empty)
       : (StreamingQuery, TwoPhaseParquetSink, TwoPhaseParquetSink) =
     startWith(source, _ => valueSchema, target, config, dlqDir,
-              checkpointDir, quarantineDir, appendCheck)
+              checkpointDir, quarantineDir, appendCheck, drift = None)
 
   /** [[start]] without a declared value schema: the schema is inferred
     * from the first non-empty micro batch's payloads (bounded sample, see
@@ -197,8 +232,8 @@ object StreamPipeline {
       if (java.nio.file.Files.exists(schemaFile))
         Some(StructType.fromDDL(java.nio.file.Files.readString(schemaFile)))
       else None
-    startWith(source, batch => {
-      val schema = Option(memo.get).orElse(persisted()).map { s => memo.set(s); s }.getOrElse {
+    startWith(source, batch =>
+      Option(memo.get).orElse(persisted()).map { s => memo.set(s); s }.getOrElse {
         // Reconcile inference toward the DESTINATION contract: every
         // target field is parsed at its TARGET type (nullable — the
         // strict converter applies its own required-field rules), because
@@ -225,39 +260,43 @@ object StreamPipeline {
           memo.set(inferred)
         }
         inferred
-      }
-      // drift signal: rows whose payload carries a top-level field the
-      // learned schema does not know. Case-insensitive like the schema
-      // reconciliation above; malformed payloads yield NULL keys and are
-      // not drift (they already route to the DLQ as unparseable).
-      drift.foreach { m =>
-        // Locale.ROOT: this lowercasing is compared against Spark's
-        // locale-independent lower() — default toLowerCase under tr/az
-        // JVMs maps I→ı and would flag every row as drifted
-        val known = (schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet +
-            CorruptField.toLowerCase(java.util.Locale.ROOT))
-          .toSeq.sorted.map(lit(_))
-        val n = batch
-          .filter(col("value").isNotNull)
-          .filter(size(array_except(
-            transform(json_object_keys(col("value")), k => lower(k)),
-            array(known: _*))) > 0)
-          .count()
-        m.record(n)
-      }
-      schema
-    }, target, config, dlqDir, checkpointDir, quarantineDir, appendCheck)
+      }, target, config, dlqDir, checkpointDir, quarantineDir, appendCheck, drift)
   }
 
+  /** The pipeline behind [[start]] and [[startInferred]]. One micro-batch:
+    *
+    *   1. Materialize: decode with the batch's schema, compute the single
+    *      `err` column — the validation error if there is one, else the
+    *      error the quarantine ledger recorded for the row's coordinates
+    *      (a broadcast left join, skipped while the ledger is empty) — and
+    *      persist (coordinates, `value`, `payload`, `err`). One `noop`
+    *      write fills the cache; an [[org.apache.spark.sql.Observation]]
+    *      on it returns the drift count, so drift is counted on every
+    *      attempt, a rejected one included, with no job of its own.
+    *   2. `appendCheck` on the good rows, read from the cache.
+    *   3. The data leg (good rows) on the batch thread and the DLQ leg
+    *      (`err` not null: bad and quarantined rows, one filter) on a
+    *      thread forked from it, which inherits Spark's job group — so
+    *      `query.stop()` cancels both — and is joined before the batch
+    *      returns or rethrows; a DLQ failure fails the batch. The DLQ
+    *      sink stages its batch and publishes it (directory move, then
+    *      marker) only once the data leg has landed: a batch whose data
+    *      leg fails leaves no DLQ marker, so its replay writes whatever
+    *      DLQ set it computes then — including rows a replayed
+    *      `appendCheck` newly quarantines.
+    *   4. Unpersist (blocking) in a `finally`, on every path.
+    */
   private def startWith(source: DataFrame, schemaFor: DataFrame => StructType,
                         target: StructType, config: SinkConfig,
                         dlqDir: String, checkpointDir: String,
                         quarantineDir: Option[String],
-                        appendCheck: DataFrame => Seq[(String, Int, Long, String)])
+                        appendCheck: DataFrame => Seq[(String, Int, Long, String)],
+                        drift: Option[SchemaDriftMonitor])
       : (StreamingQuery, TwoPhaseParquetSink, TwoPhaseParquetSink) = {
     val sink = new TwoPhaseParquetSink(config)
-    val dlqSink = new TwoPhaseParquetSink(SinkConfig(dlqDir))
+    val dlqSink = new TwoPhaseParquetSink(SinkConfig(dlqDir, WriteMode.Pending))
     val ledger = quarantineDir.map(new QuarantineLedger(_))
+    val coords = Seq(col("topic"), col("partition"), col("offset"))
     val query = source
       .writeStream
       .option("checkpointLocation", checkpointDir)
@@ -267,53 +306,74 @@ object StreamPipeline {
         import spark.implicits._
         // decode per batch (a from_json projection — identical plan to
         // decoding the stream, but the schema may come from the batch)
-        val batch = decode(rawBatch, schemaFor(rawBatch))
-        val (good, dlq) = validationSplit(batch, target)
-        // flatten the good leg onto the destination schema (A8); the raw
-        // envelope payload rides along UNDER A RESERVED ALIAS so
-        // quarantined rows reach the DLQ with their original payload — a
-        // bare "value" would collide with (and silently drop) a target
-        // field of the same name.
-        val flatAll = good.select(
-          (Seq(col("topic"), col("partition"), col("offset"),
-               col("value").as("_envelope_value")) ++
-            target.fields.map(f => col(s"payload.${f.name}").as(f.name))): _*)
+        val schema = schemaFor(rawBatch)
+        val checked = decode(rawBatch, schema).withColumn("err", validationError(target))
         // (2) feedback: previously-quarantined coordinates skip the append
+        // and reach the DLQ with the recorded error
         val quarantined = ledger.map(_.load()).getOrElse(Seq.empty)
-        val (toAppend, dlqQuarantine) =
-          if (quarantined.isEmpty) (flatAll, None)
+        val marked =
+          if (quarantined.isEmpty) checked
           else {
             val qdf = quarantined.map(e => (e.topic, e.partition, e.offset, e.error))
               .toDF("topic", "partition", "offset", "_qerr")
-            val marked = flatAll.join(broadcast(qdf),
-              Seq("topic", "partition", "offset"), "left_outer")
-            (marked.filter(col("_qerr").isNull).drop("_qerr"),
-             Some(marked.filter(col("_qerr").isNotNull)
-               .select(col("topic"), col("partition"), col("offset"),
-                       col("_envelope_value").as("value"),
-                       col("_qerr").as("err"))))
+            checked.join(broadcast(qdf), Seq("topic", "partition", "offset"), "left_outer")
+              .withColumn("err", coalesce(col("err"), col("_qerr")))
           }
-        val appendable = toAppend.drop("_envelope_value")
-        // (1) remote row-level response: record + fail, or classify
-        val corrupted =
-          try appendCheck(appendable)
-          catch {
-            case e: Throwable if ErrorClassifier.isRetriable(e) => throw e
-            case e: Throwable =>
-              throw new IllegalStateException("unretriable append failure", e)
+        val frame = marked
+          .select(coords ++ Seq(col("value"), col("payload"), col("err")): _*)
+          .persist()
+        try {
+          val observed = new Observation()
+          frame.observe(observed,
+              count_if(drift.fold(lit(false))(_ => unknownField(schema))).as("drift"))
+            .write.format("noop").mode("overwrite").save()
+          drift.foreach(_.record(observed.get("drift").asInstanceOf[Long]))
+          // flatten the good rows onto the destination schema (A8)
+          val appendable = frame.filter(col("err").isNull)
+            .select(coords ++ target.fields.map(f => col(s"payload.${f.name}").as(f.name)): _*)
+          // (1) remote row-level response: record + fail, or classify
+          val corrupted =
+            try appendCheck(appendable)
+            catch {
+              case e: Throwable if ErrorClassifier.isRetriable(e) => throw e
+              case e: Throwable =>
+                throw new IllegalStateException("unretriable append failure", e)
+            }
+          if (corrupted.nonEmpty) {
+            ledger.foreach(_.append(batchId, corrupted))
+            throw AppendRowsException(corrupted)
           }
-        if (corrupted.nonEmpty) {
-          ledger.foreach(_.append(batchId, corrupted))
-          throw AppendRowsException(corrupted)
-        }
-        sink.writeBatch(appendable, batchId)
-        val dlqLeg = dlq.select(col("topic"), col("partition"), col("offset"),
-                                col("value"), col("err"))
-        dlqSink.writeBatch(
-          dlqQuarantine.map(dlqLeg.unionByName(_)).getOrElse(dlqLeg), batchId)
-        ()
+          val dlqLeg = frame.filter(col("err").isNotNull)
+            .select(coords ++ Seq(col("value"), col("err")): _*)
+          alongside(dlqSink.writeBatch(dlqLeg, batchId))(sink.writeBatch(appendable, batchId))
+          // publish the staged DLQ batch only now that the data leg landed
+          dlqSink.commit()
+        } finally frame.unpersist(blocking = true)
       }
       .start()
     (query, sink, dlqSink)
+  }
+
+  /** Run `body` on this thread and `forked` on a thread started from it,
+    * then join. The fork inherits this thread's Spark local properties (job
+    * group, SQL execution) at creation, so a query stop cancels its jobs
+    * too. The join waits out interrupts (re-asserting the flag after), so
+    * the fork never outlives the call; a failure of either side is thrown,
+    * the fork's as suppressed when both fail. */
+  private def alongside(forked: => Unit)(body: => Unit): Unit = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val fork = new Thread(() => try forked catch { case e: Throwable => failure.set(e) },
+      s"${Thread.currentThread().getName}-fork")
+    fork.setDaemon(true)
+    fork.start()
+    def join(): Unit = {
+      var interrupted = false
+      while (fork.isAlive) try fork.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+    try body
+    catch { case e: Throwable => join(); Option(failure.get).foreach(e.addSuppressed); throw e }
+    join()
+    Option(failure.get).foreach(e => throw e)
   }
 }

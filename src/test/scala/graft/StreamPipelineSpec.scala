@@ -2,9 +2,19 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.graftshim.ListenerBusShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sink.{ErrorClassifier, SinkConfig, TwoPhaseParquetSink, WriteMode}
@@ -28,6 +38,16 @@ class StreamPipelineSpec extends AnyFunSuite {
     StructField("int_value", LongType, nullable = false)))
 
   private def tmp(): String = Files.createTempDirectory("graft-sink").toString
+
+  private type Check = DataFrame => Seq[(String, Int, Long, String)]
+
+  /** The remote append's row-level response, rejecting the "poison" rows.
+    * Content-addressed: a plain retry would fail identically forever —
+    * only the quarantine loop makes progress. */
+  private val rejectPoison: Check = df =>
+    df.filter(col("id") === "poison")
+      .select("topic", "partition", "offset").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), "row rejected by remote append")).toSeq
 
   private def runPipeline(records: Seq[Env], mode: WriteMode) = {
     import spark.implicits._
@@ -138,13 +158,6 @@ class StreamPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val sinkDir = tmp(); val dlqDir = tmp(); val ckpt = tmp(); val qDir = tmp()
-    // content-addressed rejection: a plain retry would fail identically
-    // forever — only the quarantine loop makes progress
-    val reject: org.apache.spark.sql.DataFrame => Seq[(String, Int, Long, String)] =
-      df => df.filter(col("id") === "poison")
-        .select("topic", "partition", "offset").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
-                   "row rejected by remote append")).toSeq
     val stream = MemoryStream[Env]
     stream.addData(Seq(
       Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
@@ -152,7 +165,7 @@ class StreamPipelineSpec extends AnyFunSuite {
       Env("t", 0, 2L, null, """{"id":"id-2","int_value":3}""")))
     def run() = StreamPipeline.start(stream.toDF(), valueSchema, target,
       SinkConfig(sinkDir), dlqDir, ckpt, quarantineDir = Some(qDir),
-      appendCheck = reject)
+      appendCheck = rejectPoison)
 
     // attempt 1: the append fails, nothing lands, the batch rewinds
     val (q1, sink1, _) = run()
@@ -341,5 +354,206 @@ class StreamPipelineSpec extends AnyFunSuite {
     sink.commit()
     assert(sink.read(spark).count() == 2)
     assert(sink.committedBatchIds() == Seq(0L, 1L))
+  }
+
+  // --- the per-batch flow: materialize once, check, two legs, unpersist
+
+  /** Every `RDDScanExec` leaf of a plan (each one a pass over the batch
+    * foreachBatch hands over) and the cached relations it reads. */
+  private object Scans extends AdaptiveSparkPlanHelper {
+    def direct(p: SparkPlan): Int = collectWithSubqueries(p) { case s: RDDScanExec => s }.size
+    def cached(p: SparkPlan) =
+      collectWithSubqueries(p) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+  }
+
+  test("one micro-batch decodes the envelope once and runs three jobs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val plans = ArrayBuffer.empty[SparkPlan]
+    val groups = ArrayBuffer.empty[String]
+    val executions = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.synchronized { groups += e.properties.getProperty("spark.jobGroup.id") }
+    }
+    val stream = MemoryStream[Env]
+    stream.addData(Seq(
+      Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
+      Env("t", 0, 1L, null, """not json at all"""),
+      Env("t", 0, 2L, null, """{"id":null,"int_value":3}""")))
+    ListenerBusShim.drain(spark.sparkContext)
+    spark.listenerManager.register(executions)
+    spark.sparkContext.addSparkListener(jobs)
+    val (q, sink, dlq) =
+      try {
+        val started = StreamPipeline.start(stream.toDF(), valueSchema, target,
+          SinkConfig(tmp()), dlqDir = tmp(), checkpointDir = tmp(), quarantineDir = Some(tmp()))
+        started._1.awaitTermination(60000)
+        ListenerBusShim.drain(spark.sparkContext)
+        started
+      } finally {
+        spark.listenerManager.unregister(executions)
+        spark.sparkContext.removeSparkListener(jobs)
+      }
+    assert(q.exception.isEmpty, s"${q.exception}")
+    assert(sink.read(spark).count() == 1 && dlq.read(spark).count() == 2)
+    val direct = plans.map(Scans.direct).sum
+    val caches = plans.flatMap(Scans.cached).distinct
+    assert(direct == 0, "no execution re-reads the batch past the cache")
+    assert(caches.size == 1, s"one persisted frame per batch, got ${caches.size}")
+    assert(caches.map(c => Scans.direct(c.cachedPlan)).sum == 1,
+      "the cache decodes the envelope in one pass")
+    assert(groups.count(_ == q.runId.toString) == 3,
+      s"materialize, data leg and DLQ leg; got jobs of groups $groups")
+  }
+
+  test("the batch frame is unpersisted whether the batch lands or fails") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // earlier suites keep pinned frames in the same cache manager, so the
+    // check is on this batch's frame: appendCheck sees a plan over it,
+    // which the cache manager still resolves to the cache after the query
+    // ends if the frame was left persisted
+    def readsCache(plan: LogicalPlan) =
+      spark.sessionState.executePlan(plan).withCachedData.exists(_.isInstanceOf[InMemoryRelation])
+    val outcomes = Seq[(String, Check, Boolean)](
+      ("clean batch", _ => Seq.empty, true),
+      ("appendCheck rejection", rejectPoison, false),
+      ("retriable transport failure", _ => throw new java.io.IOException("transient"), false),
+      ("unretriable failure", _ => throw new IllegalArgumentException("bad request"), false))
+    outcomes.foreach { case (name, check, lands) =>
+      val stream = MemoryStream[Env]
+      stream.addData(Seq(
+        Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
+        Env("t", 0, 1L, null, """{"id":"poison","int_value":2}""")))
+      @volatile var seen: Option[(LogicalPlan, Boolean)] = None
+      val (q, sink, _) = StreamPipeline.start(stream.toDF(), valueSchema, target,
+        SinkConfig(tmp()), dlqDir = tmp(), checkpointDir = tmp(),
+        quarantineDir = Some(tmp()), appendCheck = df => {
+          val plan = df.queryExecution.analyzed
+          seen = Some(plan -> readsCache(plan))
+          check(df)
+        })
+      try q.awaitTermination(60000) catch { case _: Exception => () }
+      assert(q.exception.isEmpty == lands, s"$name: ${q.exception}")
+      assert(sink.committedBatchIds().nonEmpty == lands, name)
+      val (plan, cachedDuringBatch) = seen.getOrElse(fail(s"$name: appendCheck never ran"))
+      assert(cachedDuringBatch, s"$name: appendCheck must read the persisted frame")
+      assert(!readsCache(plan), s"$name left the batch frame cached")
+    }
+  }
+
+  test("a failing DLQ leg fails the batch; the replay lands both legs exactly once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    for (mode <- Seq(WriteMode.Committed, WriteMode.Pending)) {
+      val sinkDir = tmp(); val dlqDir = tmp(); val ckpt = tmp()
+      val stream = MemoryStream[Env]
+      stream.addData(Seq(
+        Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
+        Env("t", 0, 1L, null, """not json at all"""),
+        Env("t", 0, 2L, null, """{"id":"id-2","int_value":3}""")))
+      def run() = {
+        val (q, sink, dlq) = StreamPipeline.start(stream.toDF(), valueSchema, target,
+          SinkConfig(sinkDir, mode), dlqDir, ckpt)
+        try q.awaitTermination(60000) catch { case _: Exception => () }
+        (q, sink, dlq)
+      }
+      // a file that links to itself where the DLQ leg stages its batch:
+      // neither a directory to write into nor one the overwrite removes
+      new TwoPhaseParquetSink(SinkConfig(dlqDir))
+      val blocker = java.nio.file.Paths.get(dlqDir, "_staging", "batch=0")
+      Files.createSymbolicLink(blocker, blocker)
+      val (q1, _, dlq1) = run()
+      val causes = q1.exception.toSeq.flatMap(e => Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(c => String.valueOf(c.getMessage)))
+      assert(causes.exists(_.contains(blocker.toString)), s"$mode: a failed DLQ leg must fail the batch")
+      assert(dlq1.committedBatchIds().isEmpty)
+      Files.delete(blocker)
+      val (q2, sink2, dlq2) = run()
+      assert(q2.exception.isEmpty, s"$mode: replay must succeed: ${q2.exception}")
+      sink2.commit()
+      assert(sink2.read(spark).collect().map(_.getAs[Long]("offset")).sorted.toSeq == Seq(0L, 2L),
+        s"$mode: good rows exactly once")
+      assert(dlq2.read(spark).collect().map(_.getAs[Long]("offset")).toSeq == Seq(1L),
+        s"$mode: DLQ rows exactly once")
+      assert(sink2.committedBatchIds() == Seq(0L) && dlq2.committedBatchIds() == Seq(0L), s"$mode")
+    }
+  }
+
+  test("drift is counted once per attempt, the rejected attempt included") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = tmp(); val out = tmp(); val dlqD = tmp(); val qDir = tmp()
+    val monitor = new StreamPipeline.SchemaDriftMonitor
+    val stream = MemoryStream[Env]
+    def run(check: Check) = {
+      val (q, sink, dlq) = StreamPipeline.startInferred(stream.toDF(), target,
+        SinkConfig(out), dlqDir = dlqD, checkpointDir = ckpt, quarantineDir = Some(qDir),
+        appendCheck = check, drift = Some(monitor))
+      try q.awaitTermination(60000) catch { case _: Exception => () }
+      (q, sink, dlq)
+    }
+    // the learning batch: no unknown field to drift from
+    stream.addData(Seq(Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}""")))
+    assert(run(_ => Seq.empty)._1.exception.isEmpty)
+    stream.addData(Seq(
+      Env("t", 0, 1L, null, """{"id":"id-1","int_value":2,"brand_new_field":true}"""),
+      Env("t", 0, 2L, null, """{"id":"poison","int_value":3}""")))
+    val (q2, _, _) = run(rejectPoison)
+    assert(q2.exception.nonEmpty, "the first attempt is rejected")
+    assert(monitor.driftRows == 1L, "the rejected attempt counts its drift")
+    val (q3, sink3, dlq3) = run(rejectPoison)
+    assert(q3.exception.isEmpty, s"${q3.exception}")
+    assert(monitor.driftRows == 2L && monitor.driftBatches == 2L,
+      s"once per attempt: rows ${monitor.driftRows}, batches ${monitor.driftBatches}")
+    assert(sink3.read(spark).collect().map(_.getAs[String]("id")).toSet == Set("id-0", "id-1"))
+    assert(dlq3.read(spark).collect().map(_.getAs[Long]("offset")).toSeq == Seq(2L))
+  }
+
+  test("a failed data leg publishes no DLQ batch; a row its replay rejects reaches the DLQ once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    for (mode <- Seq(WriteMode.Committed, WriteMode.Pending)) {
+      val sinkDir = tmp(); val dlqDir = tmp(); val ckpt = tmp(); val qDir = tmp()
+      val stream = MemoryStream[Env]
+      stream.addData(Seq(
+        Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
+        Env("t", 0, 1L, null, """not json at all"""),
+        Env("t", 0, 2L, null, """{"id":"poison","int_value":3}""")))
+      def run(check: Check) = {
+        val (q, sink, dlq) = StreamPipeline.start(stream.toDF(), valueSchema, target,
+          SinkConfig(sinkDir, mode), dlqDir, ckpt, quarantineDir = Some(qDir), appendCheck = check)
+        try q.awaitTermination(60000) catch { case _: Exception => () }
+        (q, sink, dlq)
+      }
+      // attempt 1: the remote accepts every row, but the data leg's write
+      // is blocked by a self-linking file where its batch directory goes
+      new TwoPhaseParquetSink(SinkConfig(sinkDir))
+      val blocker = java.nio.file.Paths.get(sinkDir,
+        if (mode == WriteMode.Committed) "data" else "_staging", "batch=0")
+      Files.createSymbolicLink(blocker, blocker)
+      val (q1, _, dlq1) = run(_ => Seq.empty)
+      assert(q1.exception.nonEmpty, s"$mode: a failed data leg must fail the batch")
+      assert(dlq1.committedBatchIds().isEmpty, s"$mode: no DLQ batch lands ahead of the data leg")
+      Files.delete(blocker)
+      // attempt 2: the replayed append rejects the poison row; attempt 3
+      // routes it to the DLQ next to the unparseable row
+      val (q2, _, _) = run(rejectPoison)
+      assert(q2.exception.nonEmpty, s"$mode: the rejection fails the replay")
+      val (q3, sink3, dlq3) = run(rejectPoison)
+      assert(q3.exception.isEmpty, s"$mode: ${q3.exception}")
+      sink3.commit()
+      assert(sink3.read(spark).collect().map(_.getAs[Long]("offset")).toSeq == Seq(0L), s"$mode")
+      assert(dlq3.read(spark).collect().map(r => (r.getAs[Long]("offset"), r.getAs[String]("err")))
+          .sortBy(_._1).toSeq ==
+        Seq((1L, "unparseable payload"), (2L, "row rejected by remote append")),
+        s"$mode: every DLQ row exactly once")
+      assert(sink3.committedBatchIds() == Seq(0L) && dlq3.committedBatchIds() == Seq(0L), s"$mode")
+    }
   }
 }

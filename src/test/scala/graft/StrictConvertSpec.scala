@@ -11,7 +11,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{ConvertError, StrictConvert, StrictToJson}
+import graft.functions.{ConversionException, ConvertError, StrictConvert, StrictToJson}
 
 class StrictConvertSpec extends AnyFunSuite {
   /** Deterministic ScalaCheck sampling (scalatestplus bridge isn't on the
@@ -142,5 +142,53 @@ class StrictConvertSpec extends AnyFunSuite {
     val out = spark.sql(
       "SELECT strict_to_json(named_struct('a', 1L, 'b', 'x')) AS j").collect()(0).getString(0)
     assert(out == """{"a":1,"b":"x"}""")
+  }
+
+  test("convert_error validates without building JSON: same verdicts and messages") {
+    // every fixture above, plus timestamp, date, map and binary values:
+    // convert_error must return exactly strict_to_json's error message, or
+    // null where strict_to_json converts
+    val ts = StructType(Seq(
+      StructField("t", TimestampType, nullable = false), StructField("d", DateType)))
+    val mapSchema = StructType(Seq(StructField("m",
+      MapType(StringType, LongType, valueContainsNull = false), nullable = false)))
+    val nestedArr = StructType(Seq(StructField("a",
+      ArrayType(inner, containsNull = true), nullable = false)))
+    val bin = StructType(Seq(StructField("b", BinaryType)))
+    val ok = Row("id", 1L, 1.0, true, Seq(), Map("k" -> 1), Row("x", true), null)
+    val cases: Seq[(Row, StructType, Boolean, Option[String])] = Seq(
+      (Row("id", 12345L, 0.123, true, Seq("a", "b", "c"), Map("k1" -> 1),
+        Row("inner_value", false), null), rich, true, None),
+      (ok, rich, true, None),
+      (Row(null, 1L, 1.0, true, Seq(), Map("k" -> 1), Row("x", true), null), rich, true,
+        Some("null in required field $.id")),
+      (Row("id", 1L, 1.0, true, Seq(), Map("k" -> 1), Row(null, true), null), rich, true,
+        Some("null in required field $.struct_value.inner1")),
+      (Row("id", 1L, 1.0, true, Seq("a", null), Map("k" -> 1), Row("x", true), null), rich, true,
+        Some("null in required field $.array_value[1]")),
+      (Row("id", 1L, 1.0, true, Seq(), Map("k" -> 1), Row("x", true), Seq(null, "b")), rich,
+        true, None),
+      (Row(Seq(Row("a", true), null, Row("c", null))), nestedArr, true,
+        Some("null in required field $.a[2].inner2")),
+      (Row(java.sql.Timestamp.valueOf("2024-02-29 23:59:59.123456"),
+        java.sql.Date.valueOf("1969-12-31")), ts, true, None),
+      (Row(null, java.sql.Date.valueOf("2024-01-01")), ts, true,
+        Some("null in required field $.t")),
+      (Row(java.sql.Timestamp.valueOf("1900-01-01 00:00:00"), null), ts, true, None),
+      (Row(Map("a" -> 1L, "b" -> 2L)), mapSchema, true, None),
+      (Row(Map("a" -> 1L, "b" -> null)), mapSchema, true,
+        Some("null in required field $.m{1}")),
+      (Row(Array[Byte](1, 2, 3)), bin, true, Some("Bytes field is unsupported at $.b")),
+      (Row(Array[Byte](1, 2, 3)), bin, false, None),
+      (Row(null), bin, true, None))
+    cases.foreach { case (row, schema, strict, expected) =>
+      val lit = Literal.create(row, schema)
+      val thrown =
+        try { StrictToJson(lit, strict).eval(null); None }
+        catch { case ConversionException(msg) => Some(msg) }
+      assert(thrown == expected, s"strict_to_json on $row")
+      val err = ConvertError(lit, strict).eval(null)
+      assert(Option(err).map(_.toString) == expected, s"convert_error on $row")
+    }
   }
 }
