@@ -20,12 +20,18 @@ import scala.util.Using
   * so a crash mid-append never yields a torn ledger entry.
   *
   * Scale: the ledger carries only rows a remote append REJECTED — error
-  * cardinality, not data cardinality. The pipeline turns it into a
-  * broadcast anti-join side; if a pathological stream ever produced
-  * millions of corrupted rows, the same files read as a DataFrame and the
-  * join drops the broadcast hint — the layout stays valid.
+  * cardinality, not data cardinality. The pipeline loads it once per batch
+  * and looks each row up in it as a literal set of that size inside the
+  * batch's own projection (Spark's `InSet`, ordered for these struct
+  * keys, O(log n) a row), with a literal coordinate→error map for the
+  * rows that match; a stream with millions of corrupted rows would make
+  * that literal too large for a plan, and would need the files read as a
+  * DataFrame and joined instead — the layout stays valid for that.
   */
 object QuarantineLedger {
+  /** A ledger file: `batch-<id>.csv`, one per batch that recorded rows. */
+  private val BatchFile = """batch-(\d+)\.csv""".r
+
   /** JVM-wide per-directory append locks: two QuarantineLedger INSTANCES
     * over the same directory (e.g. an old and a restarted pipeline in one
     * driver) must serialize their read-merge-writes — an instance-level
@@ -105,11 +111,17 @@ class QuarantineLedger(dir: String) {
       Entry(unescape(t), p.toInt, o.toLong, unescape(e))
     }
 
-  /** All quarantined coordinates recorded so far. */
+  /** All quarantined coordinates recorded so far, in batch order (numeric:
+    * `batch-2` before `batch-10`), so a coordinate recorded by two batches
+    * meets its first-recorded error first. */
   def load(): Seq[Entry] = {
-    val files = Using.resource(Files.list(root))(_.iterator().asScala.toSeq)
-      .filter(_.getFileName.toString.endsWith(".csv")).sortBy(_.getFileName.toString)
-    files.flatMap(readFile)
+    val files = Using.resource(Files.list(root))(_.iterator().asScala.toSeq).flatMap { f =>
+      f.getFileName.toString match {
+        case QuarantineLedger.BatchFile(id) => Some(id.toLong -> f)
+        case _ => None
+      }
+    }
+    files.sortBy(_._1).flatMap { case (_, f) => readFile(f) }
   }
 
   def isEmpty: Boolean = load().isEmpty

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.functions.StrictConvert
+import graft.functions.{JsonKeyScan, StrictConvert}
 import graft.sink.{AppendRowsException, ErrorClassifier, QuarantineLedger, SinkConfig, TwoPhaseParquetSink, WriteMode}
 
 /** End-to-end streaming assembly, the Spark image of the whole reference
@@ -27,8 +27,10 @@ import graft.sink.{AppendRowsException, ErrorClassifier, QuarantineLedger, SinkC
   *
   *   1. materialize: one persisted frame (coordinates, `value`, decoded
   *      `payload`, one `err` column) filled by a single observed `noop`
-  *      write that also returns the drift count;
-  *   2. `appendCheck` on the frame's good rows;
+  *      write that also returns the drift count — one job, whatever the
+  *      quarantine ledger holds;
+  *   2. `appendCheck` on the frame's good rows, unless the data sink
+  *      already committed the batch;
   *   3. the data leg and the DLQ leg, written concurrently from the frame
   *      (the image of the reference's in-flight appends joined by one
   *      Phaser, BigqueryStreamWriter.java:58,97-100); the DLQ leg is
@@ -157,21 +159,29 @@ object StreamPipeline {
   }
 
   /** True for a row whose payload carries a top-level field the learned
-    * schema does not know (the [[SchemaDriftMonitor]] signal).
-    * Case-insensitive like [[startInferred]]'s schema reconciliation;
-    * malformed payloads yield NULL keys and are not drift (they already
-    * route to the DLQ as unparseable). */
-  private def unknownField(schema: StructType): Column = {
-    // Locale.ROOT: this lowercasing is compared against Spark's
-    // locale-independent lower() — default toLowerCase under tr/az
-    // JVMs maps I→ı and would flag every row as drifted
-    val known = (schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet +
-        CorruptField.toLowerCase(java.util.Locale.ROOT))
-      .toSeq.sorted.map(lit(_))
-    col("value").isNotNull && size(array_except(
-      transform(json_object_keys(col("value")), k => lower(k)),
-      array(known: _*))) > 0
-  }
+    * schema does not know (the [[SchemaDriftMonitor]] signal), in one key
+    * scan per row ([[graft.functions.HasUnknownKey]]). Case-insensitive
+    * like [[startInferred]]'s schema reconciliation; null payloads and
+    * malformed ones read NULL and are not drift (the latter already route
+    * to the DLQ as unparseable). */
+  private def unknownField(schema: StructType): Column =
+    JsonKeyScan.has_unknown_key(col("value"), schema.fieldNames.toSet + CorruptField)
+
+  /** The error the quarantine ledger recorded for a row's coordinates, null
+    * when it holds none — the image of put()'s `corruptedRowOffsets`
+    * lookup. A membership test of the coordinates in the entries as
+    * literals (Spark's `InSet` above 10 of them), and for the rows that
+    * match, a literal coordinate→error map: no join, no job of its own.
+    * A coordinate recorded in several ledger files keeps the error of the
+    * earliest batch, as [[QuarantineLedger.append]] keeps the first. */
+  private def recordedError(entries: Seq[QuarantineLedger#Entry]): Column =
+    if (entries.isEmpty) lit(null).cast(StringType)
+    else {
+      val recorded = entries.groupMapReduce(e => (e.topic, e.partition, e.offset))(_.error)((first, _) => first)
+      val coordinates = struct(col("topic"), col("partition"), col("offset"))
+      val errors = typedLit(recorded)
+      when(coordinates.isin(recorded.keys.toSeq.map(typedLit(_)): _*), errors(coordinates))
+    }
 
   /** Assemble and start the full pipeline on any streaming envelope
     * source. Returns the query plus the two sinks (data + DLQ) so tests
@@ -189,7 +199,7 @@ object StreamPipeline {
     *      durable [[QuarantineLedger]] under `quarantineDir` and the batch
     *      THROWS — offsets rewind, nothing landed (preCommit rewind).
     *   2. The restarted query replays the same batch; rows whose
-    *      coordinates are in the ledger are split out by a broadcast
+    *      coordinates are in the ledger are split out by a literal set
     *      lookup BEFORE the append and land in the DLQ with the recorded
     *      error (put()'s corruptedRowOffsets skip → errorReport).
     *   3. The re-append of the surviving rows succeeds and commits.
@@ -268,12 +278,18 @@ object StreamPipeline {
     *   1. Materialize: decode with the batch's schema, compute the single
     *      `err` column — the validation error if there is one, else the
     *      error the quarantine ledger recorded for the row's coordinates
-    *      (a broadcast left join, skipped while the ledger is empty) — and
-    *      persist (coordinates, `value`, `payload`, `err`). One `noop`
-    *      write fills the cache; an [[org.apache.spark.sql.Observation]]
-    *      on it returns the drift count, so drift is counted on every
-    *      attempt, a rejected one included, with no job of its own.
-    *   2. `appendCheck` on the good rows, read from the cache.
+    *      (a column expression over the ledger loaded as literals, see
+    *      [[recordedError]]) — and persist (coordinates, `value`,
+    *      `payload`, `err`). One `noop` write fills the cache — one job
+    *      however many entries the ledger holds: no broadcast, no stage
+    *      of its own; an [[org.apache.spark.sql.Observation]] on it
+    *      returns the drift count (one key scan per row,
+    *      [[unknownField]]), so drift is counted on every attempt, a
+    *      rejected one included, with no job of its own.
+    *   2. `appendCheck` on the good rows, read from the cache — skipped
+    *      when the data sink has already committed this batch id: the
+    *      data leg landed on an earlier attempt whose DLQ publish failed,
+    *      and a row the check rejected now would reach both sinks.
     *   3. The data leg (good rows) on the batch thread and the DLQ leg
     *      (`err` not null: bad and quarantined rows, one filter) on a
     *      thread forked from it, which inherits Spark's job group — so
@@ -302,25 +318,15 @@ object StreamPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val spark = rawBatch.sparkSession
-        import spark.implicits._
         // decode per batch (a from_json projection — identical plan to
         // decoding the stream, but the schema may come from the batch)
         val schema = schemaFor(rawBatch)
-        val checked = decode(rawBatch, schema).withColumn("err", validationError(target))
         // (2) feedback: previously-quarantined coordinates skip the append
         // and reach the DLQ with the recorded error
         val quarantined = ledger.map(_.load()).getOrElse(Seq.empty)
-        val marked =
-          if (quarantined.isEmpty) checked
-          else {
-            val qdf = quarantined.map(e => (e.topic, e.partition, e.offset, e.error))
-              .toDF("topic", "partition", "offset", "_qerr")
-            checked.join(broadcast(qdf), Seq("topic", "partition", "offset"), "left_outer")
-              .withColumn("err", coalesce(col("err"), col("_qerr")))
-          }
-        val frame = marked
-          .select(coords ++ Seq(col("value"), col("payload"), col("err")): _*)
+        val frame = decode(rawBatch, schema)
+          .select(coords ++ Seq(col("value"), col("payload"),
+            coalesce(validationError(target), recordedError(quarantined)).as("err")): _*)
           .persist()
         try {
           val observed = new Observation()
@@ -331,14 +337,18 @@ object StreamPipeline {
           // flatten the good rows onto the destination schema (A8)
           val appendable = frame.filter(col("err").isNull)
             .select(coords ++ target.fields.map(f => col(s"payload.${f.name}").as(f.name)): _*)
-          // (1) remote row-level response: record + fail, or classify
+          // (1) remote row-level response: record + fail, or classify. A
+          // batch the data sink already committed landed on an earlier
+          // attempt (its DLQ publish failed): its rows are not re-checked.
           val corrupted =
-            try appendCheck(appendable)
-            catch {
-              case e: Throwable if ErrorClassifier.isRetriable(e) => throw e
-              case e: Throwable =>
-                throw new IllegalStateException("unretriable append failure", e)
-            }
+            if (sink.isCommitted(batchId)) Seq.empty
+            else
+              try appendCheck(appendable)
+              catch {
+                case e: Throwable if ErrorClassifier.isRetriable(e) => throw e
+                case e: Throwable =>
+                  throw new IllegalStateException("unretriable append failure", e)
+              }
           if (corrupted.nonEmpty) {
             ledger.foreach(_.append(batchId, corrupted))
             throw AppendRowsException(corrupted)

@@ -6,18 +6,22 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.graftshim.ListenerBusShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sink.{ErrorClassifier, SinkConfig, TwoPhaseParquetSink, WriteMode}
+import graft.functions.JsonKeyScan
+import graft.sink.{ErrorClassifier, QuarantineLedger, SinkConfig, TwoPhaseParquetSink, WriteMode}
 import graft.streaming.StreamPipeline
 
 /** Mirrors the reference's writer/integration test coverage
@@ -359,16 +363,20 @@ class StreamPipelineSpec extends AnyFunSuite {
   // --- the per-batch flow: materialize once, check, two legs, unpersist
 
   /** Every `RDDScanExec` leaf of a plan (each one a pass over the batch
-    * foreachBatch hands over) and the cached relations it reads. */
+    * foreachBatch hands over), the cached relations it reads and its
+    * broadcasts. */
   private object Scans extends AdaptiveSparkPlanHelper {
     def direct(p: SparkPlan): Int = collectWithSubqueries(p) { case s: RDDScanExec => s }.size
     def cached(p: SparkPlan) =
       collectWithSubqueries(p) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+    def broadcasts(p: SparkPlan): Int = collectWithSubqueries(p) { case b: BroadcastExchangeExec => b }.size
   }
 
-  test("one micro-batch decodes the envelope once and runs three jobs") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+  /** Runs one pipeline query to its end with a query-execution listener
+    * and a job listener registered: the query and sinks, every executed
+    * plan, and the job group of every job started meanwhile. */
+  private def recorded(start: => (StreamingQuery, TwoPhaseParquetSink, TwoPhaseParquetSink))
+      : ((StreamingQuery, TwoPhaseParquetSink, TwoPhaseParquetSink), Seq[SparkPlan], Seq[String]) = {
     val plans = ArrayBuffer.empty[SparkPlan]
     val groups = ArrayBuffer.empty[String]
     val executions = new QueryExecutionListener {
@@ -380,25 +388,30 @@ class StreamPipelineSpec extends AnyFunSuite {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         groups.synchronized { groups += e.properties.getProperty("spark.jobGroup.id") }
     }
+    ListenerBusShim.drain(spark.sparkContext)
+    spark.listenerManager.register(executions)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val started = start
+      started._1.awaitTermination(60000)
+      ListenerBusShim.drain(spark.sparkContext)
+      (started, plans.toSeq, groups.toSeq)
+    } finally {
+      spark.listenerManager.unregister(executions)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
+  test("one micro-batch decodes the envelope once and runs three jobs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Env]
     stream.addData(Seq(
       Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
       Env("t", 0, 1L, null, """not json at all"""),
       Env("t", 0, 2L, null, """{"id":null,"int_value":3}""")))
-    ListenerBusShim.drain(spark.sparkContext)
-    spark.listenerManager.register(executions)
-    spark.sparkContext.addSparkListener(jobs)
-    val (q, sink, dlq) =
-      try {
-        val started = StreamPipeline.start(stream.toDF(), valueSchema, target,
-          SinkConfig(tmp()), dlqDir = tmp(), checkpointDir = tmp(), quarantineDir = Some(tmp()))
-        started._1.awaitTermination(60000)
-        ListenerBusShim.drain(spark.sparkContext)
-        started
-      } finally {
-        spark.listenerManager.unregister(executions)
-        spark.sparkContext.removeSparkListener(jobs)
-      }
+    val ((q, sink, dlq), plans, groups) = recorded(StreamPipeline.start(stream.toDF(), valueSchema,
+      target, SinkConfig(tmp()), dlqDir = tmp(), checkpointDir = tmp(), quarantineDir = Some(tmp())))
     assert(q.exception.isEmpty, s"${q.exception}")
     assert(sink.read(spark).count() == 1 && dlq.read(spark).count() == 2)
     val direct = plans.map(Scans.direct).sum
@@ -409,6 +422,160 @@ class StreamPipelineSpec extends AnyFunSuite {
       "the cache decodes the envelope in one pass")
     assert(groups.count(_ == q.runId.toString) == 3,
       s"materialize, data leg and DLQ leg; got jobs of groups $groups")
+  }
+
+  test("a ledger of more than 10 entries marks its rows in the batch's own three jobs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val qDir = tmp()
+    val nasty = "rejected, twice\nover a \\ backslash"
+    // batch 0's rejections (offsets 1-12), entries of other batches whose
+    // coordinates this batch does not hold, and offset 15, which also
+    // fails validation: its validation error wins
+    val ledger = new QuarantineLedger(qDir)
+    ledger.append(0L, (1L to 12L).map(o => ("t", 0, o, if (o == 7L) nasty else s"rejected #$o")) :+
+      (("t", 0, 15L, "rejected #15")))
+    ledger.append(3L, Seq(("t", 1, 5L, "other partition"), ("u", 0, 2L, "other topic")))
+    ledger.append(7L, Seq(("t", 0, 99L, "later offset")))
+    assert(ledger.load().size == 16)
+    val stream = MemoryStream[Env]
+    stream.addData((0L to 14L).map(o => Env("t", 0, o, null, s"""{"id":"id-$o","int_value":$o}""")) :+
+      Env("t", 0, 15L, null, "not json at all"))
+    val ((q, sink, dlq), plans, groups) = recorded(StreamPipeline.start(stream.toDF(), valueSchema,
+      target, SinkConfig(tmp()), dlqDir = tmp(), checkpointDir = tmp(), quarantineDir = Some(qDir)))
+    assert(q.exception.isEmpty, s"${q.exception}")
+    assert(sink.read(spark).collect().map(_.getAs[Long]("offset")).sorted.toSeq == Seq(0L, 13L, 14L))
+    assert(dlq.read(spark).collect().map(r => (r.getAs[Long]("offset"), r.getAs[String]("err")))
+        .sortBy(_._1).toSeq ==
+      (1L to 12L).map(o => (o, if (o == 7L) nasty else s"rejected #$o")) :+ ((15L, "unparseable payload")))
+    assert(groups.count(_ == q.runId.toString) == 3,
+      s"materialize, data leg and DLQ leg; got jobs of groups $groups")
+    val caches = plans.flatMap(Scans.cached).distinct
+    assert(caches.size == 1)
+    val executed = plans ++ caches.map(_.cachedPlan)
+    assert(executed.map(Scans.broadcasts).sum == 0, "the ledger lookup broadcasts nothing")
+    assert(caches.head.cachedPlan.exists(_.expressions.exists(_.exists(_.isInstanceOf[InSet]))),
+      "the ledger's coordinates are one literal set")
+  }
+
+  test("a coordinate in two ledger files reaches the DLQ once, with the earliest batch's error") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val qDir = tmp()
+    val ledger = new QuarantineLedger(qDir)
+    // by name, batch-10.csv sorts before batch-2.csv
+    ledger.append(10L, Seq(("t", 0, 1L, "recorded by batch 10")))
+    ledger.append(2L, Seq(("t", 0, 1L, "recorded by batch 2")))
+    assert(ledger.load().map(_.error) == Seq("recorded by batch 2", "recorded by batch 10"))
+    val stream = MemoryStream[Env]
+    stream.addData(Seq(
+      Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
+      Env("t", 0, 1L, null, """{"id":"id-1","int_value":2}""")))
+    val (q, sink, dlq) = StreamPipeline.start(stream.toDF(), valueSchema, target,
+      SinkConfig(tmp()), dlqDir = tmp(), checkpointDir = tmp(), quarantineDir = Some(qDir))
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty, s"${q.exception}")
+    assert(sink.read(spark).collect().map(_.getAs[Long]("offset")).toSeq == Seq(0L))
+    assert(dlq.read(spark).collect().map(r => (r.getAs[Long]("offset"), r.getAs[String]("err"))).toSeq ==
+      Seq((1L, "recorded by batch 2")))
+  }
+
+  test("has_unknown_key answers as json_object_keys, lower and array_except did") {
+    import spark.implicits._
+    val known = Set("id", "int_value", "Ünïcödé", StreamPipeline.CorruptField)
+    // the drift column before the key scan, kept as the oracle: null where
+    // json_object_keys is null, else whether a lowercased key is unknown
+    def oracle(v: Column): Column = {
+      val keys = json_object_keys(v)
+      when(keys.isNotNull, size(array_except(transform(keys, k => lower(k)),
+        array(known.toSeq.map(k => lit(k.toLowerCase(java.util.Locale.ROOT))): _*))) > 0)
+    }
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def bytes(xs: Int*) = xs.map(_.toByte).toArray
+    val cases: Seq[(String, Array[Byte])] = Seq(
+      "exact known keys" -> utf8("""{"id":"a","int_value":1}"""),
+      "case-variant known keys" -> utf8("""{"ID":"a","Int_Value":1}"""),
+      "unknown key" -> utf8("""{"id":"a","brand_new":1}"""),
+      "unknown key below the top level" -> utf8("""{"id":{"nested_new":1},"int_value":[{"x":{"y":2}}]}"""),
+      "corrupt key" -> utf8("""{"_corrupt":"x","ID":"a"}"""),
+      "corrupt key, upper case" -> utf8("""{"_CORRUPT":"x"}"""),
+      "empty object" -> utf8("""{}"""),
+      "truncated after an unknown key" -> utf8("""{"id":"a","zzz":1,"int_va"""),
+      "malformed after an unknown key" -> utf8("""{"zzz":1,"id":}"""),
+      "array" -> utf8("""[{"zzz":1}]"""),
+      "scalar" -> utf8("42"),
+      "string scalar" -> utf8("\"zzz\""),
+      "empty string" -> utf8(""),
+      "whitespace only" -> utf8("   "),
+      "leading whitespace" -> utf8("""  {"zzz":1}"""),
+      "trailing text after a known object" -> utf8("""{"id":"a"} {"zzz":1}"""),
+      "trailing text after an unknown key" -> utf8("""{"zzz":1} garbage"""),
+      "duplicate known keys" -> utf8("""{"id":1,"id":2}"""),
+      "duplicate unknown keys" -> utf8("""{"zzz":1,"zzz":2,"id":3}"""),
+      "non-ASCII known key" -> utf8("""{"ünïcödé":1}"""),
+      "non-ASCII known key, upper case" -> utf8("""{"ÜNÏCÖDÉ":1}"""),
+      "non-ASCII unknown key" -> utf8("""{"ΣΟΦΙΑ":1,"id":"a"}"""),
+      "dotted capital I" -> utf8("""{"İD":1}"""),
+      "escaped key" -> utf8("{\"\\u0069d\":1,\"zz\\u007a\":2}"),
+      "single quotes" -> utf8("""{'id':'a','zzz':1}"""),
+      "unescaped control character" -> utf8("{\"id\":\"a\tb\"}"),
+      "byte order mark" -> (bytes(0xef, 0xbb, 0xbf) ++ utf8("""{"zzz":1}""")),
+      "leading zero byte" -> bytes(0, '{', '}'),
+      "invalid UTF-8 in a value" -> (utf8("""{"zzz":"""") ++ bytes(0xff) ++ utf8("\"}")),
+      "invalid UTF-8 in a known value" -> (utf8("""{"id":"""") ++ bytes(0xc3) ++ utf8("\"}")),
+      "invalid UTF-8 in a key" -> (utf8("{\"") ++ bytes(0xfe, 'i', 'd') ++ utf8("\":1}")),
+      "null" -> null)
+    val df = cases.toDF("name", "bytes")
+      .select(col("name"), col("bytes").cast("string").as("value"))
+    val got = df.select(col("name"), oracle(col("value")).as("oracle"),
+        JsonKeyScan.has_unknown_key(col("value"), known).as("scan"))
+      .collect().map(r => r.getString(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    cases.foreach { case (name, _) =>
+      val (expected, scanned) = got(name)
+      assert(scanned == expected, s"$name: oracle $expected, key scan $scanned")
+    }
+    // the cases reach every answer
+    assert(got.values.map(_._1).toSet == Set(Some(true), Some(false), None))
+  }
+
+  test("a replay after a failed DLQ publish does not re-check rows that landed") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val sinkDir = tmp(); val dlqDir = tmp(); val ckpt = tmp(); val qDir = tmp()
+    val stream = MemoryStream[Env]
+    stream.addData(Seq(
+      Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
+      Env("t", 0, 1L, null, """not json at all"""),
+      Env("t", 0, 2L, null, """{"id":"poison","int_value":3}""")))
+    // the remote accepts every row on the first attempt and would reject
+    // the poison row on any later one
+    val checks = new java.util.concurrent.atomic.AtomicInteger()
+    val check: Check = df => if (checks.getAndIncrement() == 0) Seq.empty else rejectPoison(df)
+    def run() = {
+      val (q, sink, dlq) = StreamPipeline.start(stream.toDF(), valueSchema, target,
+        SinkConfig(sinkDir, WriteMode.Committed), dlqDir, ckpt, quarantineDir = Some(qDir),
+        appendCheck = check)
+      try q.awaitTermination(60000) catch { case _: Exception => () }
+      (q, sink, dlq)
+    }
+    // attempt 1: the data leg lands and commits; the DLQ publish fails at
+    // its marker, blocked by a self-linking file
+    new TwoPhaseParquetSink(SinkConfig(dlqDir))
+    val blocker = java.nio.file.Paths.get(dlqDir, "_commits", "0")
+    Files.createSymbolicLink(blocker, blocker)
+    val (q1, sink1, dlq1) = run()
+    assert(q1.exception.nonEmpty, "a failed DLQ publish must fail the batch")
+    Files.delete(blocker)
+    assert(sink1.committedBatchIds() == Seq(0L) && dlq1.committedBatchIds().isEmpty)
+    val (q2, sink2, dlq2) = run()
+    assert(q2.exception.isEmpty, s"the replay must not re-check landed rows: ${q2.exception}")
+    assert(checks.get == 1, "appendCheck runs on the attempt that lands the data leg only")
+    assert(sink2.read(spark).collect().map(_.getAs[Long]("offset")).sorted.toSeq == Seq(0L, 2L),
+      "landed rows stay in the data sink")
+    assert(dlq2.read(spark).collect().map(r => (r.getAs[Long]("offset"), r.getAs[String]("err"))).toSeq ==
+      Seq((1L, "unparseable payload")), "the DLQ holds the bad rows once")
+    assert(sink2.committedBatchIds() == Seq(0L) && dlq2.committedBatchIds() == Seq(0L))
+    assert(new QuarantineLedger(qDir).isEmpty)
   }
 
   test("the batch frame is unpersisted whether the batch lands or fails") {
