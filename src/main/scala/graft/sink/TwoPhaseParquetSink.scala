@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
@@ -79,8 +79,18 @@ class TwoPhaseParquetSink(config: SinkConfig) {
   Files.createDirectories(stagingDir)
   Files.createDirectories(commitsDir)
 
+  /** The batch a commit marker stands for: `_commits/<id>` is a marker
+    * when it is a regular file (not a link, not a directory — markers are
+    * only ever created as plain files) named by a batch id. The one
+    * definition behind [[isCommitted]], [[committedBatchIds]] and [[read]]. */
+  private def markedBatch(p: Path): Option[Long] = {
+    val name = p.getFileName.toString
+    name.toLongOption.filter(id => id.toString == name &&
+      Files.isRegularFile(p, LinkOption.NOFOLLOW_LINKS))
+  }
+
   def isCommitted(batchId: Long): Boolean =
-    Files.exists(commitsDir.resolve(batchId.toString))
+    markedBatch(commitsDir.resolve(batchId.toString)).isDefined
 
   private def markCommitted(batchId: Long): Unit =
     Files.createFile(commitsDir.resolve(batchId.toString))
@@ -149,15 +159,20 @@ class TwoPhaseParquetSink(config: SinkConfig) {
   def reset(): Unit =
     stagedBatches().foreach(deleteRecursively)
 
-  /** Visible rows only — staged data never appears here. */
+  /** Visible rows only: the `data/` batches whose commit marker exists.
+    * Staged data never appears here, nor does a batch directory without a
+    * marker — a committed-mode write torn before its marker, or a pending
+    * batch moved into `data/` whose marker write failed — until its replay
+    * (or `commit()`) repairs and marks it. */
   def read(spark: SparkSession): DataFrame = {
-    val batches = listDir(dataDir).map(_.toString)
+    val committed = committedBatchIds().map(id => s"batch=$id").toSet
+    val batches = listDir(dataDir).filter(p => committed(p.getFileName.toString)).map(_.toString)
     if (batches.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(batches: _*)
   }
 
   def committedBatchIds(): Seq[Long] =
-    listDir(commitsDir).map(_.getFileName.toString.toLong).sorted
+    listDir(commitsDir).flatMap(markedBatch).sorted
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)

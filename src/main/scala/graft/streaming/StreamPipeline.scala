@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -36,6 +37,18 @@ import graft.sink.{AppendRowsException, ErrorClassifier, QuarantineLedger, SinkC
   *      Phaser, BigqueryStreamWriter.java:58,97-100); the DLQ leg is
   *      published only after the data leg has landed;
   *   4. unpersist, on every path.
+  *
+  * All of it runs on the session the pipeline was started from, not on the
+  * one the engine hands the batch over on. The engine runs each streaming
+  * query — every `AvailableNow` start, every replay after a rejection — on
+  * a fresh clone of that session, with its own session UUID, and the
+  * executor keeps one artifact class loader per session UUID. Spark's
+  * codegen cache is keyed by (class loader, code), so on the clone every
+  * task of every run compiled the batch's classes again, a per-run fixed
+  * cost the reference's long-lived writer (opened once per assigned
+  * partition, BigqueryStorageWriteSinkTask.java:51-70) does not pay. The
+  * rebound batch is the same logical plan (the engine's `LogicalRDD`, no
+  * row copied), and a batch's code compiles once per session.
   */
 object StreamPipeline {
 
@@ -275,6 +288,15 @@ object StreamPipeline {
 
   /** The pipeline behind [[start]] and [[startInferred]]. One micro-batch:
     *
+    *   0. Rebind: the batch `foreachBatch` hands over lives on the query's
+    *      session clone; the same plan is put on `source.sparkSession`
+    *      ([[org.apache.spark.sql.graftshim.SessionBridge]]) and every
+    *      step below — schema inference included — runs on that frame, so
+    *      the second and later runs compile nothing (see the header). The
+    *      clone's own settings are `spark.sql.cbo.enabled` and
+    *      `spark.sql.requireAllClusterKeysForDistribution`, both set to
+    *      Spark's default, and the state-store partition count, read by
+    *      stateful operators only: this batch plans the same on either.
     *   1. Materialize: decode with the batch's schema, compute the single
     *      `err` column — the validation error if there is one, else the
     *      error the quarantine ledger recorded for the row's coordinates
@@ -313,11 +335,15 @@ object StreamPipeline {
     val dlqSink = new TwoPhaseParquetSink(SinkConfig(dlqDir, WriteMode.Pending))
     val ledger = quarantineDir.map(new QuarantineLedger(_))
     val coords = Seq(col("topic"), col("partition"), col("offset"))
+    val session = source.sparkSession
     val query = source
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
+      .foreachBatch { (handedOver: DataFrame, batchId: Long) =>
+        // (0) the same plan on the source's session, whose codegen cache
+        // outlives this run
+        val rawBatch = SessionBridge.rebind(handedOver, session)
         // decode per batch (a from_json projection — identical plan to
         // decoding the stream, but the schema may come from the batch)
         val schema = schemaFor(rawBatch)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.graftshim.ListenerBusShim
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.InSet
@@ -358,6 +359,50 @@ class StreamPipelineSpec extends AnyFunSuite {
     sink.commit()
     assert(sink.read(spark).count() == 2)
     assert(sink.committedBatchIds() == Seq(0L, 1L))
+  }
+
+  test("a batch directory without its marker is not read until the replay or commit marks it") {
+    import spark.implicits._
+    for (mode <- Seq(WriteMode.Committed, WriteMode.Pending)) {
+      val dir = tmp()
+      val sink = new TwoPhaseParquetSink(SinkConfig(dir, mode))
+      def batch(b: Long) = Seq((s"b$b", b)).toDF("id", "v")
+      sink.writeBatch(batch(0), 0L)
+      sink.writeBatch(batch(1), 1L)
+      sink.commit()
+      // batch 1's directory is in data/, complete, but its marker is gone:
+      // a committed-mode write torn before its marker, or a pending publish
+      // whose marker write failed after the move
+      Files.delete(java.nio.file.Paths.get(dir, "_commits", "1"))
+      assert(Files.isDirectory(java.nio.file.Paths.get(dir, "data", "batch=1")), s"$mode")
+      assert(sink.read(spark).collect().map(_.getAs[String]("id")).toSeq == Seq("b0"),
+        s"$mode: an unmarked batch directory is not visible")
+      sink.writeBatch(batch(1), 1L) // the checkpoint replay
+      sink.commit()
+      assert(sink.read(spark).collect().map(_.getAs[String]("id")).sorted.toSeq == Seq("b0", "b1"),
+        s"$mode: the replay marks it visible, once")
+      assert(sink.committedBatchIds() == Seq(0L, 1L), s"$mode")
+    }
+  }
+
+  test("a commit marker is a regular file named by a batch id, to every reader of the ledger") {
+    import spark.implicits._
+    val dir = tmp()
+    val sink = new TwoPhaseParquetSink(SinkConfig(dir))
+    sink.writeBatch(Seq(("a", 1L)).toDF("id", "v"), 0L)
+    sink.writeBatch(Seq(("b", 2L)).toDF("id", "v"), 1L)
+    val commits = java.nio.file.Paths.get(dir, "_commits")
+    // batch 0's marker replaced by a file linking to itself; entries that
+    // name no batch id
+    val marker = commits.resolve("0")
+    Files.delete(marker)
+    Files.createSymbolicLink(marker, marker)
+    Files.createFile(commits.resolve("01"))
+    Files.createFile(commits.resolve("notes"))
+    Files.createDirectories(commits.resolve("2"))
+    assert(!sink.isCommitted(0L) && sink.isCommitted(1L) && !sink.isCommitted(2L))
+    assert(sink.committedBatchIds() == Seq(1L), "the self-link is not a marker to either")
+    assert(sink.read(spark).collect().map(_.getAs[String]("id")).toSeq == Seq("b"))
   }
 
   // --- the per-batch flow: materialize once, check, two legs, unpersist
@@ -722,5 +767,79 @@ class StreamPipelineSpec extends AnyFunSuite {
         s"$mode: every DLQ row exactly once")
       assert(sink3.committedBatchIds() == Seq(0L) && dlq3.committedBatchIds() == Seq(0L), s"$mode")
     }
+  }
+
+  // --- the batch runs on the source session
+
+  test("over one source session, later connector runs compile no code") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Env]
+    val sinkDir = tmp(); val dlqDir = tmp(); val ckpt = tmp(); val qDir = tmp()
+    // each run is a new streaming query (the image of a scheduled
+    // AvailableNow run) over the same source, with good, unparseable,
+    // invalid and quarantined rows, like the connector's rounds
+    def run(round: Int): Long = {
+      stream.addData((0 until 20).map { i =>
+        val o = round * 20L + i
+        Env("t", 0, o, null, i % 5 match {
+          case 0 => "not json at all"
+          case 1 => s"""{"id":null,"int_value":$o}"""
+          case _ => s"""{"id":"id-$o","int_value":$o}"""
+        })
+      })
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (q, sink, _) = StreamPipeline.start(stream.toDF(), valueSchema, target,
+        SinkConfig(sinkDir, WriteMode.Pending), dlqDir, ckpt, quarantineDir = Some(qDir))
+      q.awaitTermination(60000)
+      assert(q.exception.isEmpty, s"round $round: ${q.exception}")
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      sink.commit()
+      compiled
+    }
+    new QuarantineLedger(qDir).append(0L, (0 until 4).map(r => ("t", 0, r * 20L + 2, "rejected")))
+    run(0) // the first run compiles whatever this session has not yet
+    val later = (1 to 3).map(run)
+    assert(later.sum == 0, s"compilations in runs 2-4: $later")
+  }
+
+  test("every SQL execution a batch starts runs on the source session") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val sessions = ArrayBuffer.empty[(String, AnyRef)]
+    val executions = new QueryExecutionListener {
+      private def seen(f: String, qe: QueryExecution): Unit =
+        sessions.synchronized { sessions += f -> qe.sparkSession }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen(f, qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(f, qe)
+    }
+    val stream = MemoryStream[Env]
+    stream.addData(Seq(
+      Env("t", 0, 0L, null, """{"id":"id-0","int_value":1}"""),
+      Env("t", 0, 1L, null, """not json at all"""),
+      Env("t", 0, 2L, null, """{"id":"poison","int_value":3}""")))
+    val ckpt = tmp(); val out = tmp(); val dlqD = tmp(); val qDir = tmp()
+    // registered before the queries start, so each query's session clone
+    // copies it and reports the executions on the clone to it too
+    ListenerBusShim.drain(spark.sparkContext)
+    spark.listenerManager.register(executions)
+    try {
+      // inference, a rejected attempt and its replay
+      Seq(false, true).foreach { lands =>
+        val (q, _, _) = StreamPipeline.startInferred(stream.toDF(), target, SinkConfig(out),
+          dlqDir = dlqD, checkpointDir = ckpt, quarantineDir = Some(qDir),
+          appendCheck = rejectPoison, drift = Some(new StreamPipeline.SchemaDriftMonitor))
+        try q.awaitTermination(60000) catch { case _: Exception => () }
+        assert(q.exception.isEmpty == lands, s"${q.exception}")
+      }
+      ListenerBusShim.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(executions)
+    // the inference sample and its read, `isEmpty`, the materialization of
+    // each attempt, appendCheck's collects and the two legs of the replay
+    assert(sessions.map(_._1).groupMapReduce(identity)(_ => 1)(_ + _) ==
+      Map("collect" -> 3, "rdd" -> 1, "isEmpty" -> 1, "overwrite" -> 2, "command" -> 2),
+      s"executions seen: ${sessions.map(_._1)}")
+    assert(sessions.forall(_._2 eq spark),
+      s"executions on another session: ${sessions.filterNot(_._2 eq spark).map(_._1)}")
   }
 }
