@@ -5,17 +5,16 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-import graft.functions.{ConvertError, CosineSimilarity, DotProduct, StrictToJson, WinnowFingerprints}
+import graft.functions.{ConvertError, CosineSimilarity, DotProduct, L2SquaredQ, StrictToJson,
+  WinnowFingerprints}
 
 /** Session extension wiring: `--conf spark.sql.extensions=graft.GraftExtensions`
   * (or `.withExtensions(new GraftExtensions)`) registers the engine's
   * custom Catalyst expressions as SQL functions in every session the
   * extension builds — the injection path Spark intends for libraries, so
-  * no imperative registerAll call is needed per session. Also injects
-  * [[graft.plans.RangeJoinRewrite]]: with `spark.graft.rangeJoin.binWidth`
-  * set, naive point-in-interval theta joins plan as binned equi-joins
-  * automatically (declare the range join; the library picks the physical
-  * shape — the whole-operator Rule/Strategy extension path).
+  * this is the one place a SQL function is registered. It injects no
+  * optimizer rule and reads no session conf, so no query's plan depends
+  * on what ran before it in the session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -24,7 +23,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "scala_udf")
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
     e.injectFunction((FunctionIdentifier("strict_to_json"),
       info("strict_to_json", "strict schema-driven struct->json conversion"),
       (es: Seq[Expression]) => StrictToJson(es.head)))
@@ -37,6 +35,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((FunctionIdentifier("vec_cosine"),
       info("vec_cosine", "codegen'd cosine similarity over array<double>"),
       (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
+    e.injectFunction((FunctionIdentifier("vec_l2sq_q"),
+      info("vec_l2sq_q", "codegen'd squared L2 distance over array<bigint>"),
+      (es: Seq[Expression]) => L2SquaredQ(es(0), es(1))))
     e.injectFunction((FunctionIdentifier("winnow_fingerprints"),
       info("winnow_fingerprints",
         "winnowing rolling-hash fingerprints: winnow_fingerprints(text, k, w)"),

@@ -66,9 +66,9 @@ object RangeJoin {
     // span is negative so the <= guard passes vacuously, and Spark's
     // sequence(a, b) with a > b generates a DESCENDING |span|-element
     // array — a sentinel row like (start=10^15, end=0) would materialize
-    // the giant per-row array the guard exists to prevent. Mirror
-    // RangeJoinRewrite: lo > hi (or NULL bounds) yields an empty array,
-    // so the row drops at the explode, same as the NULL path always did.
+    // the giant per-row array the guard exists to prevent. So lo > hi
+    // (or NULL bounds) yields an empty array and the row drops at the
+    // explode, as a NULL-bounded row always did.
     val iv = intervals.withColumn("_bin",
       explode(expr(
         s"CASE WHEN $startCol <= $endCol THEN " +

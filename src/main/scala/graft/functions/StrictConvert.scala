@@ -221,11 +221,4 @@ object StrictConvert {
     column(StrictToJson(expression(c), strict = true, Some(target)))
   def convert_error_as(c: Column, target: StructType): Column =
     column(ConvertError(expression(c), strict = true, Some(target)))
-
-  /** Register for SQL use: `SELECT strict_to_json(struct(...)) ...` */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("strict_to_json", es => StrictToJson(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("convert_error", es => ConvertError(es.head), "scala_udf")
-  }
 }

@@ -195,11 +195,4 @@ object VectorExpressions {
     column(CosineSimilarity(expression(a), expression(b)))
   def vec_l2sq_q(a: Column, b: Column): Column =
     column(L2SquaredQ(expression(a), expression(b)))
-
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot", es => DotProduct(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_cosine", es => CosineSimilarity(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_l2sq_q", es => L2SquaredQ(es(0), es(1)), "scala_udf")
-  }
 }

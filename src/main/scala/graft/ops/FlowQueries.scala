@@ -207,29 +207,20 @@ object FlowQueries {
         .orderBy("iv_id")
     },
 
-    // The DECLARATIVE twin of q53: the range join written as the raw
-    // point-in-interval theta join, planned by the RangeJoinRewrite
-    // optimizer rule (registered session-wide via GraftExtensions,
-    // enabled by the binWidth conf set here) into the same binned
-    // equi-join q53 builds by hand — the "declare the logical plan, let
-    // the library pick the physical shape" path, oracle-checked
-    // end-to-end. Correctness does NOT depend on the rule: in a session
-    // without the extension the theta join plans as a (correct, slower)
-    // broadcast nested loop; the rule is a pure physical rewrite.
-    // The conf is session-scoped and stays set; it only matches
-    // 2-conjunct integral point-in-interval theta joins, and this is
-    // the only declared query with that shape (PlanSpec pins the
-    // rewritten plan, GraftExtensionsSpec the rule's semantics).
+    // q53's twin over a different sample (every 300th order, a 21-day
+    // window, every 5th lineitem), kept under its original name. The bin
+    // width is a call argument, so building this query leaves the
+    // session's conf as it found it (RelationalSpec checks that for every
+    // declared query).
     "q98_rangejoin_declarative" -> { (s, d) =>
-      s.conf.set(graft.plans.RangeJoinRewrite.BinWidthConf, "16")
       val iv = Tables.orders(s, d).filter(col("o_orderkey") % 300 === 0)
         .select(col("o_orderkey").as("iv_id"),
           expr("unix_date(CAST(o_orderdate AS DATE))").cast("long").as("start_day"))
         .withColumn("end_day", col("start_day") + 21)
       val pts = Tables.lineitem(s, d).filter(col("l_orderkey") % 5 === 0)
         .select(expr("unix_date(CAST(l_shipdate AS DATE))").cast("long").as("pt_day"))
-      pts.join(iv,
-          col("start_day") <= col("pt_day") && col("pt_day") <= col("end_day"))
+      graft.flow.RangeJoin.pointInInterval(
+          pts, iv, "pt_day", "start_day", "end_day", binWidth = 16L)
         .groupBy("iv_id")
         .agg(count(lit(1)).as("n_pts"),
              min("pt_day").as("min_day"), max("pt_day").as("max_day"))

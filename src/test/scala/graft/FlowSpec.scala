@@ -93,6 +93,23 @@ class FlowSpec extends AnyFunSuite {
       .select("iv_id", "pt").orderBy("iv_id", "pt").collect().map(_.toSeq).toSeq
     assert(binned == naive)
     assert(binned.nonEmpty && binned.size == (10 + 16 + 1 + 16))
+    // seeded random intervals (negative coordinates, inverted, wider than
+    // a bin) give exactly the theta join's rows at every bin width
+    val rnd = new scala.util.Random(42)
+    val rIv = (1 to 60).map { i =>
+      val a = rnd.between(-100L, 200L); val b = rnd.between(-100L, 260L)
+      (i.toLong, a, b)
+    }.toDF("iv_id", "s", "e")
+    val rPts = (-120L to 300L by 3L).map(Tuple1(_)).toDF("pt")
+    val rNaive = rPts.join(rIv, col("s") <= col("pt") && col("pt") <= col("e"))
+      .select("iv_id", "pt").orderBy("iv_id", "pt").collect().map(_.toSeq).toSeq
+    assert(rNaive.nonEmpty)
+    for (bw <- Seq(1L, 7L, 64L)) {
+      val rBinned = RangeJoin.pointInInterval(rPts, rIv, "pt", "s", "e",
+          binWidth = bw, maxBinsPerInterval = 1000L)
+        .select("iv_id", "pt").orderBy("iv_id", "pt").collect().map(_.toSeq).toSeq
+      assert(rBinned == rNaive, s"binned join diverges at binWidth=$bw")
+    }
   }
 
   test("range join rejects ambiguous columns and oversize intervals fail fast") {
@@ -128,6 +145,11 @@ class FlowSpec extends AnyFunSuite {
     val ivN = Seq((1L, Option(0L), Option(10L)), (2L, Option.empty[Long], Option(5L)))
       .toDF("iv_id", "s", "e")
     assert(RangeJoin.pointInInterval(pts, ivN, "pt", "s", "e", 16L).count() == 1L)
+    // an inverted sentinel interval (start >> end, negative span) neither
+    // generates a descending bin sequence nor trips the budget: zero rows,
+    // as in the theta join
+    val inv = Seq((10L, Long.MaxValue / 4, 0L)).toDF("iv_id", "s", "e")
+    assert(RangeJoin.pointInInterval(pts, inv, "pt", "s", "e", 16L).count() == 0L)
   }
 
   test("dedupSurvivor keeps the deterministic first-ranked row") {

@@ -24,101 +24,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
           |       vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
           |       vec_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,
           |       convert_error(named_struct('a', 1L)) AS e,
-          |       size(winnow_fingerprints('abcdefghijkl', 5, 4)) AS w
+          |       size(winnow_fingerprints('abcdefghijkl', 5, 4)) AS w,
+          |       vec_l2sq_q(array(3L, -2L), array(1L, 4L)) AS q
           |""".stripMargin).collect()(0)
       assert(r.getString(0) == """{"a":1}""")
       assert(r.getDouble(1) == 11.0)
       assert(r.getDouble(2) == 1.0)
       assert(r.isNullAt(3))
       assert(r.getInt(4) > 0, "winnow_fingerprints must be callable from SQL")
-    } finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
-  }
-
-  test("RangeJoinRewrite plans a theta range join as a binned equi-join") {
-    val shared = SparkTestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      import spark.implicits._
-      import org.apache.spark.sql.functions.col
-      // intervals at awkward boundaries incl. empty (s>e), negative, and
-      // longer-than-binWidth spans; points across the whole range
-      val iv = Seq((1L, 10L, 19L), (2L, 15L, 30L), (3L, 31L, 31L),
-                   (4L, 64L, 79L), (5L, 50L, 40L), (6L, -20L, -3L),
-                   (7L, 5L, 90L))
-        .toDF("iv_id", "s", "e")
-      val pts = (-25L to 100L).map(Tuple1(_)).toDF("pt")
-      def run() = pts.join(iv, col("s") <= col("pt") && col("pt") <= col("e"))
-        .select("iv_id", "pt").orderBy("iv_id", "pt").collect().map(_.toSeq).toSeq
-      // rule off (default): the naive plan is a nested-loop join
-      spark.conf.set("spark.graft.rangeJoin.binWidth", "0")
-      val naive = run()
-      val offPlan = pts.join(iv, col("s") <= col("pt") && col("pt") <= col("e"))
-        .queryExecution.executedPlan.toString
-      assert(offPlan.contains("BroadcastNestedLoopJoin") || offPlan.contains("CartesianProduct"),
-        s"baseline should be the nested-loop shape:\n${offPlan.take(800)}")
-      // rule on: same rows, hash-join shape, no nested loop
-      spark.conf.set("spark.graft.rangeJoin.binWidth", "16")
-      val rewritten = run()
-      assert(rewritten == naive, "rewrite must not change results")
-      assert(rewritten.nonEmpty)
-      val onPlan = pts.join(iv, col("s") <= col("pt") && col("pt") <= col("e"))
-        .queryExecution.executedPlan.toString
-      assert(!onPlan.contains("BroadcastNestedLoopJoin") && !onPlan.contains("CartesianProduct"),
-        s"rewritten plan still nested-loop:\n${onPlan.take(1500)}")
-      assert(onPlan.contains("Generate explode"),
-        s"rewritten plan must explode interval bins:\n${onPlan.take(1500)}")
-      // an interval spanning more bins than the budget fails fast with a
-      // named error instead of materializing a giant per-row array
-      val wide = Seq((9L, 0L, Long.MaxValue / 4)).toDF("iv_id", "s", "e")
-      val ex = intercept[Throwable] {
-        pts.join(wide, col("s") <= col("pt") && col("pt") <= col("e")).count()
-      }
-      def messages(t: Throwable): Seq[String] =
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-          .map(x => Option(x.getMessage).getOrElse("")).toSeq
-      assert(messages(ex).exists(_.contains("maxBinsPerInterval")),
-        s"expected the replication-budget error, got: ${messages(ex).take(3)}")
-      // an INVERTED sentinel interval (s >> e, negative span) must not
-      // generate a descending multi-million-element bin sequence NOR
-      // bypass the budget: zero rows, same as the theta join
-      val inv = Seq((10L, Long.MaxValue / 4, 0L)).toDF("iv_id", "s", "e")
-      assert(pts.join(inv, col("s") <= col("pt") && col("pt") <= col("e")).count() == 0L)
-      // a malformed conf value disables the rewrite instead of failing
-      // every query in the session
-      spark.conf.set("spark.graft.rangeJoin.binWidth", "not-a-number")
-      assert(run() == naive, "malformed conf must fall back to the naive plan")
-      // randomized equivalence across bin widths: seeded random intervals
-      // (incl. negative coords, inverted, and wider-than-bin spans) must
-      // produce exactly the theta join's rows at every bin width
-      val rnd = new scala.util.Random(42)
-      val rIv = (1 to 60).map { i =>
-        val a = rnd.between(-100L, 200L); val b = rnd.between(-100L, 260L)
-        (i.toLong, a, b)
-      }.toDF("iv_id", "s", "e")
-      val rPts = (-120L to 300L by 3L).map(Tuple1(_)).toDF("pt")
-      def runR() = rPts.join(rIv, col("s") <= col("pt") && col("pt") <= col("e"))
-        .select("iv_id", "pt").orderBy("iv_id", "pt").collect().map(_.toSeq).toSeq
-      spark.conf.set("spark.graft.rangeJoin.binWidth", "0")
-      val rNaive = runR()
-      assert(rNaive.nonEmpty)
-      spark.conf.set("spark.graft.rangeJoin.maxBinsPerInterval", "1000")
-      for (bw <- Seq("1", "7", "64")) {
-        spark.conf.set("spark.graft.rangeJoin.binWidth", bw)
-        assert(runR() == rNaive, s"rewrite diverges at binWidth=$bw")
-      }
-      // restore BOTH confs so later assertions (and future appends to
-      // this test) see the defaults, not the loop's raised budget
-      spark.conf.unset("spark.graft.rangeJoin.maxBinsPerInterval")
-      spark.conf.set("spark.graft.rangeJoin.binWidth", "0")
+      assert(r.getLong(5) == 4L + 36L)
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)

@@ -174,15 +174,23 @@ class PlanSpec extends AnyFunSuite {
     assert(smj == 0, s"no probe may sort-merge the fact table:\n${p.take(3000)}")
   }
 
-  test("q98 declarative range join is planned by RangeJoinRewrite, not a nested loop") {
-    // the rule's fingerprint: the injected bin columns appear in the
-    // optimized plan, the theta join has become an equi-join on them
-    // (hash-partitionable), and no BroadcastNestedLoopJoin survives
+  test("q98 range join plans as a binned equi-join, not a nested loop") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // the operator's shape: each interval explodes onto its bins, the
+    // points join them on the bin id (hash-partitionable), and no
+    // BroadcastNestedLoopJoin survives
     val df = SparkEntry.queries("q98_rangejoin_declarative")(spark, sf)
-    val opt = df.queryExecution.optimizedPlan.toString
-    assert(opt.contains("_graft_bin"),
-      s"rewrite did not fire (no bin columns in the optimized plan):\n${opt.take(3000)}")
     val phys = df.queryExecution.executedPlan.toString
+    assert(phys.contains("Generate explode"),
+      s"intervals must explode onto their bins:\n${phys.take(3000)}")
+    val opt = df.queryExecution.optimizedPlan
+    val binKeys = opt.collect { case j: Join => j.condition.toSeq }.flatten.flatMap(_.collect {
+      case EqualTo(l: AttributeReference, r: AttributeReference)
+          if l.name == "_bin" && r.name == "_bin" => l
+    })
+    assert(binKeys.nonEmpty,
+      s"the range join must be an equi-join on _bin:\n${opt.toString.take(3000)}")
     assert(!phys.contains("BroadcastNestedLoopJoin"),
       s"theta range join must not plan as a nested loop:\n${phys.take(3000)}")
   }

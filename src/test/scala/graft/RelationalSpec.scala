@@ -31,9 +31,20 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("every declared query runs and returns rows at sf0.001") {
+    // building a query must leave the session's SQL conf as it found it,
+    // or a later query's plan depends on which queries ran before it. The
+    // one allowed key is the parquet flag Tables.events sets to read its
+    // own nanosecond timestamps.
+    val allowed = Set("spark.sql.legacy.parquet.nanosAsLong")
+    def conf() = spark.conf.getAll.filterNot { case (k, _) => allowed(k) }.toSet
     SparkEntry.queries.foreach { case (name, fn) =>
+      val before = conf()
       val n = fn(spark, sf).count()
       assert(n > 0, s"$name returned 0 rows")
+      val after = conf()
+      val (set, dropped) = (after -- before, before -- after)
+      assert(set.isEmpty && dropped.isEmpty, s"$name changed the session conf: " +
+        s"set ${set.mkString(", ")}; unset or replaced ${dropped.mkString(", ")}")
     }
   }
 

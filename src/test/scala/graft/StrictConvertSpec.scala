@@ -138,7 +138,6 @@ class StrictConvertSpec extends AnyFunSuite {
   }
 
   test("SQL registration works end-to-end") {
-    StrictConvert.registerAll(spark)
     val out = spark.sql(
       "SELECT strict_to_json(named_struct('a', 1L, 'b', 'x')) AS j").collect()(0).getString(0)
     assert(out == """{"a":1,"b":"x"}""")

@@ -49,14 +49,12 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("SQL registration") {
-    VectorExpressions.registerAll(spark)
     val r = spark.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .collect()(0).getDouble(0)
     assert(r == 11.0)
   }
 
   test("vec_l2sq_q matches a Scala fold and rejects non-bigint arrays") {
-    VectorExpressions.registerAll(spark)
     val r = spark.sql(
       "SELECT vec_l2sq_q(array(3L, -2L, 7L), array(1L, 4L, 7L)) AS d")
       .collect()(0).getLong(0)
