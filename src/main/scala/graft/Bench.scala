@@ -25,6 +25,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
+    // SPARK_GRAFT_ONLY (local dev only; the driver never sets it): CSV of
+    // query names to measure — lets a single new query get its dual-run
+    // baseline entry without re-timing the whole surface. Unset = all.
+    // Parsed before the session is built: an unknown name fails the run.
+    val names = sys.env.get("SPARK_GRAFT_ONLY").map(Harness.queryNames)
+      .getOrElse(SparkEntry.queries.keys.toSeq).sorted
 
     def action(name: String, dir: String)(s: SparkSession): Unit =
       SparkEntry.queries(name)(s, dir).write.format("noop").mode("overwrite").save()
@@ -35,14 +41,6 @@ object Bench {
       case None => o.seconds
     }
     val loop = new Harness.Loop(rewarm = Some((s, name) => action(name, warmDir)(s)))
-
-    // SPARK_GRAFT_ONLY (local dev only; the driver never sets it): CSV of
-    // query names to measure — lets a single new query get its dual-run
-    // baseline entry without re-timing the whole surface. Unset = all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
 
     // warmup at the smallest SF (not measured)
     names.foreach(n => seconds(n, loop.once(n)(action(n, warmDir))))
@@ -59,71 +57,11 @@ object Bench {
     val runA = names.map(measure)
     val runB = names.map(measure)
 
-    // Streaming micro-bench (round-7 VERDICT "Next round #5"): the five
-    // stateful streaming ops get throughput/latency/state-size numbers.
-    // Runs on a FRESH session so batch-suite heap state cannot skew it;
-    // each op is watchdogged like any query. SPARK_GRAFT_STREAMBENCH=0
-    // skips (local query-subset iteration); with SPARK_GRAFT_ONLY set
-    // it is skipped too — subset runs baseline individual queries.
-    val streamJson: String =
-      if (only.isDefined || sys.env.get("SPARK_GRAFT_STREAMBENCH").contains("0")) ""
-      else {
-        loop.restart()
-        val rows = sys.env.get("SPARK_GRAFT_STREAM_ROWS")
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(100000)
-        var results = Map.empty[String, graft.streaming.StreamBench.OpResult]
-        Watchdog.run(loop.spark, "streambench", timeoutSec = 600L) {
-          results = graft.streaming.StreamBench.run(loop.spark, rows)
-        }.foreach(msg => System.err.println(s"[bench] streambench failed: $msg"))
-        if (results.isEmpty) ""
-        else results.toSeq.sortBy(_._1).map { case (k, r) =>
-          val rps = if (r.sec > 0) r.rows / r.sec else 0.0
-          val spb = if (r.batches > 0) r.sec / r.batches else 0.0
-          "\"" + k + "\":{\"rows\":" + r.rows + ",\"sec\":" + r.sec +
-            ",\"rows_per_sec\":" + rps + ",\"batches\":" + r.batches +
-            ",\"sec_per_batch\":" + spb + ",\"state_rows\":" + r.stateRows + "}"
-        }.mkString(",\"streaming\":{", ",", "}")
-      }
-
-    // Scale-out sweep (round-9 VERDICT ask #4b): the same gauges at
-    // shuffle-partitions 1/4/16 and on the RocksDB state store, at a
-    // reduced per-config row budget. runScaling builds one fresh session
-    // per config, so the current session is stopped first; the sweep is
-    // bounded by a plain thread-join timeout (Watchdog is session-
-    // coupled and these sessions are sweep-internal).
-    val streamScaleJson: String =
-      if (only.isDefined || sys.env.get("SPARK_GRAFT_STREAMBENCH").contains("0")
-          || sys.env.get("SPARK_GRAFT_STREAM_SCALING").contains("0")) ""
-      else {
-        loop.stop()
-        val rows = sys.env.get("SPARK_GRAFT_STREAM_SCALE_ROWS")
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(25000)
-        @volatile var results =
-          Map.empty[String, Map[String, graft.streaming.StreamBench.OpResult]]
-        val t = new Thread(() => {
-          try results = graft.streaming.StreamBench.runScaling(rows)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] stream scaling failed: ${e.getMessage}") }
-        }, "stream-scaling")
-        t.setDaemon(true)
-        t.start()
-        t.join(900L * 1000L)
-        if (t.isAlive) System.err.println("[bench] stream scaling timed out")
-        if (results.isEmpty) ""
-        else results.toSeq.sortBy(_._1).map { case (cfg, ops) =>
-          "\"" + cfg + "\":{" + ops.toSeq.sortBy(_._1).map { case (k, r) =>
-            val rps = if (r.sec > 0) r.rows / r.sec else 0.0
-            "\"" + k + "\":{\"rows\":" + r.rows + ",\"rows_per_sec\":" + rps +
-              ",\"batches\":" + r.batches + ",\"state_rows\":" + r.stateRows + "}"
-          }.mkString(",") + "}"
-        }.mkString(",\"streaming_scaling\":{", ",", "}")
-      }
-
     def toJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = runA.map(_._2).filter(_ >= 0).sum
     val totalB = runB.map(_._2).filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(runA)},"queriesB":${toJson(runB)},"totalB":$totalB$streamJson$streamScaleJson,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(runA)},"queriesB":${toJson(runB)},"totalB":$totalB,"sf":"$sfDir"}"""
     // Durable file copy: with ~100 queries the JSON line outgrows captured
     // stdout tails (round 3 lost q01–q36 that way), so the file is the
     // artifact of record and stdout stays the driver-contract summary.

@@ -13,22 +13,35 @@ object Harness {
     .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ > 0)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** A local session on [[cpus]] cores with UTC time, no UI and
-    * GraftExtensions, `partitions` shuffle partitions and any extra
-    * `conf` (StreamBench's scaling sweep sets its state-store provider).
+  /** A local session on [[cpus]] cores and [[cpus]] shuffle partitions,
+    * with AQE, UTC time, no UI and GraftExtensions. Every harness main
+    * builds its sessions here and only here.
     */
-  def session(partitions: Int = cpus, conf: Map[String, String] = Map.empty): SparkSession = {
-    val b = SparkSession.builder()
+  def session(): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", partitions.toLong)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
-    conf.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Query names from a comma-separated list: each entry trimmed, empty
+    * entries dropped. Throws if the list names no query or an entry is not
+    * in [[SparkEntry.queries]] (naming it), so a typo fails before any
+    * session is built instead of measuring nothing.
+    */
+  def queryNames(csv: String): Seq[String] = {
+    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    require(names.nonEmpty, s"no query names in \"$csv\"")
+    val declared = SparkEntry.queries.keySet
+    val unknown = names.filterNot(declared)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    names
   }
 
   /** Counted queries per residency window of [[Loop]]. */
@@ -81,7 +94,7 @@ object Harness {
     }
 
     /** Release the families and go on with a fresh session. */
-    def restart(): Unit = {
+    private def restart(): Unit = {
       stop()
       live = session()
       counted = 0

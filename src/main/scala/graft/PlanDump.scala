@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val names = Harness.queryNames(args(0))
     val outDir = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val suffix = if (args.length > 3) args(3) else "before"

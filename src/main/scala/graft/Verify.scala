@@ -6,8 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg (local dev only): CSV of query names to run.
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val only: Option[Set[String]] = args.lift(2).map(Harness.queryNames(_).toSet)
     val loop = new Harness.Loop()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -185,8 +185,8 @@ abstract class ConvertBase extends UnaryExpression with CodegenFallback {
   * (the reference's exception path). Use ConvertError for the splitting
   * sink path.
   */
-case class StrictToJson(child: Expression, strict: Boolean = true,
-                        target: Option[StructType] = None) extends ConvertBase {
+case class StrictToJson(child: Expression, strict: Boolean = true) extends ConvertBase {
+  override def target: Option[StructType] = None
   override def nullSafeEval(value: Any): Any = convertTop(value)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "strict_to_json"
@@ -217,8 +217,6 @@ object StrictConvert {
   def convert_error(c: Column): Column = column(ConvertError(expression(c)))
   /** Validate against a declared destination schema (nullability taken from
     * `target`, types from the data) — the A8 target-table-schema image. */
-  def strict_to_json_as(c: Column, target: StructType): Column =
-    column(StrictToJson(expression(c), strict = true, Some(target)))
   def convert_error_as(c: Column, target: StructType): Column =
     column(ConvertError(expression(c), strict = true, Some(target)))
 }

@@ -62,4 +62,30 @@ class HarnessSpec extends AnyFunSuite {
     } finally loop.stop()
     assert(Caches.residentSessions.isEmpty)
   }
+
+  test("query-name lists are trimmed, drop empty entries and reject unknown names") {
+    assert(Harness.queryNames("q01_pricing_summary, q150_acf_lags") ==
+      Seq("q01_pricing_summary", "q150_acf_lags"))
+    assert(Harness.queryNames(" q01_pricing_summary,,q150_acf_lags ,") ==
+      Seq("q01_pricing_summary", "q150_acf_lags"))
+    val e = intercept[IllegalArgumentException](
+      Harness.queryNames("q01_pricing_summary,q01_pricing_sumary"))
+    assert(e.getMessage.contains("q01_pricing_sumary"))
+    assert(!e.getMessage.contains("q01_pricing_summary"))
+    intercept[IllegalArgumentException](Harness.queryNames(" , "))
+  }
+
+  test("session() has the fixed harness settings and loads GraftExtensions") {
+    // stop the shared test session so getOrCreate builds a fresh one
+    SparkSession.getDefaultSession.foreach(_.stop())
+    val s = Harness.session()
+    try {
+      assert(s.sparkContext.master == s"local[${Harness.cpus}]")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == Harness.cpus.toString)
+      assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.sql("SELECT strict_to_json(named_struct('a', 1L))").head().getString(0) ==
+        """{"a":1}""")
+    } finally s.stop()
+  }
 }
